@@ -42,7 +42,7 @@ surface, built on the Jégou et al. PQ / inverted-file design.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -293,7 +293,7 @@ def load_ann_index(spark, path: str):
     m×ksub×dsub doubles — the same broadcast-sized objects the in-line
     fit ships); the code table stays a LAZY DataFrame so the serving
     regime decides whether to collect it (under the broadcast cap) or
-    scan it distributed (the sharded grid join)."""
+    scan it distributed (the grid scan)."""
     import numpy as np
 
     meta = spark.read.parquet(f"{path}/meta").head().asDict()
@@ -364,16 +364,15 @@ def ann_topk_against_index(
     import math
     import warnings
 
-    import numpy as np
-
     from udacity_capstone_data_engineering_spark.operators.pq import (
-        _ivfpq_candidates_udf,
-        _sharded_ivfpq_candidates,
+        _ivfpq_pairs,
+        _query_frame,
         probe_fraction_for_recall,
         rerank_budget,
     )
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         BROADCAST_SCORE_MAX_BYTES,
+        _rank_topk,
         _score_pairs,
         _unit_vectors,
     )
@@ -385,7 +384,7 @@ def ann_topk_against_index(
         else max_broadcast_bytes
     )
     centers, books, codes, meta = load_ann_index(spark, path)
-    n, m = meta["n"], meta["m"]
+    n = meta["n"]
     n_centroids = meta["n_centroids"]
     if staleness != "ignore":
         cstats = emb.agg(
@@ -414,67 +413,12 @@ def ann_topk_against_index(
         rerank = rerank_budget(n, k, target_recall)
 
     unit = _unit_vectors(emb, id_col, vec_col)
-    if queries is None:
-        qv = unit.filter(F.col("uv").isNotNull())
-        n_q = n
-    else:
-        qv = _unit_vectors(queries, id_col, vec_col).filter(
-            F.col("uv").isNotNull()
-        )
-        n_q = queries.count()
-
-    index_bytes = n * (8 + m)
-    if index_bytes > cap:
-        # sharded regime (r11): the CELL-PACKED grid join — cells pack
-        # into byte-capped shards (hot cells hash-split under the
-        # cap), exactly the in-line past-the-cap plan
-        # (``pq._sharded_ivfpq_candidates``) — but the codes come off
-        # parquet (already cell-partitioned at rest) instead of a
-        # fresh encode.
-        qframe = qv.select(F.col(id_col).alias("query_id"), "uv")
-        pairs = _sharded_ivfpq_candidates(
-            qframe, codes.select("id", "cell", "codes"), centers, books,
-            nprobe, rerank, n_queries=n_q, cap=cap,
-        ).filter(F.col("query_id") != F.col("neighbor_id"))
-    else:
-        # broadcast regime: collect the code table (n×(8+m) bytes,
-        # under the cap by the gate above) and scan probed cells
-        # inside the worker — the same kernel as the in-line path.
-        pdf = codes.orderBy("id").toPandas()
-        ids = np.asarray(pdf["id"].to_numpy(), dtype=np.int64)
-        cells = np.asarray(pdf["cell"].to_numpy(), dtype=np.int64)
-        cmat = (
-            np.vstack(pdf["codes"].to_numpy()).astype(np.uint8)
-            if len(pdf)
-            else np.zeros((0, m), dtype=np.uint8)
-        )
-        cell_ids, cell_codes = [], []
-        for c in range(len(centers)):
-            mask = cells == c
-            cell_ids.append(ids[mask])
-            cell_codes.append(cmat[mask])
-
-        cand = _ivfpq_candidates_udf(
-            spark, centers, books, cell_ids, cell_codes, nprobe, rerank
-        )
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        pairs = (
-            fan_out_small_scan(qv)
-            .select(
-                F.col(id_col).alias("query_id"), cand(F.col("uv")).alias("cs")
-            )
-            .select("query_id", F.explode("cs").alias("neighbor_id"))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    scored = _score_pairs(emb, id_col, vec_col, pairs, n=n, unit=unit)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
+    _, qframe, n_q = _query_frame(unit, queries, id_col, vec_col, n)
+    # the same scan as the in-line ivfpq_topk, but the codes come off
+    # parquet (already cell-partitioned at rest) instead of a fresh
+    # encode
+    pairs = _ivfpq_pairs(
+        qframe, codes.select("id", "cell", "codes"), centers, books,
+        nprobe, rerank, n, n_q, cap,
     )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return _rank_topk(_score_pairs(emb, id_col, vec_col, pairs, n=n, unit=unit), k)

@@ -12,8 +12,12 @@ one that exploits cluster structure when the corpus has it:
      the measured pandas-UDF sweet spot (large compute per byte moved:
      batch×dim @ dim×k), unlike per-pair scoring where Arrow transfer
      dominates (see ``functions/vectors.dot_vectorized``).
-  3. Search joins query probes to candidates on the cell id —
-     candidates ≈ n × nprobe / k_cells instead of n².
+  3. Search scores each query against its probed cells only —
+     candidates ≈ n × nprobe / k_cells instead of n². Under the
+     broadcast cap the inverted file goes through the shared
+     ``similarity._broadcast_scan`` runner with the cell-major block
+     scorer (``pq._cell_major_candidates`` over unit-vector cells);
+     otherwise query probes join candidates on the cell id.
 
 ``n_centroids`` auto-sizes to ~sqrt(n), the standard IVF heuristic, so
 per-query candidate count grows as nprobe·sqrt(n), not linearly.
@@ -21,7 +25,7 @@ per-query candidate count grows as nprobe·sqrt(n), not linearly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -75,144 +79,6 @@ def _fit_centroids(
     return centers
 
 
-def _build_inverted_file(ids, mat, centers, chunk_rows: int = 262_144):
-    """Driver-side inverted file from a collected unit matrix: per
-    cell, (ids ASCENDING, matching vector rows).  Assignment is the
-    same argmax(x·c − ½|c|²) as ``_probe_cells_udf`` rank 0, computed
-    in bounded row chunks so the (n × cells) score buffer never
-    materializes whole."""
-    import numpy as np
-
-    correction = 0.5 * (centers * centers).sum(axis=1)
-    order = np.argsort(ids, kind="stable")
-    ids, mat = ids[order], mat[order]
-    labels = np.empty(len(ids), dtype=np.int64)
-    for lo in range(0, len(ids), chunk_rows):
-        hi = min(lo + chunk_rows, len(ids))
-        labels[lo:hi] = (mat[lo:hi] @ centers.T - correction).argmax(axis=1)
-    cell_ids, cell_mats = [], []
-    for c in range(len(centers)):
-        mask = labels == c
-        cell_ids.append(ids[mask])
-        cell_mats.append(mat[mask])
-    return cell_ids, cell_mats
-
-
-def _ivf_scan_candidates_udf(spark, centers, cell_ids, cell_mats, nprobe, take):
-    """pandas_udf: unit query vector → its top-``take`` candidate ids
-    by EXACT cosine over the probed cells' vectors (score desc, id asc
-    ties), computed cell-at-a-time with dgemms — no candidate-pair
-    shuffle (VERDICT r4 #3: the pair-join scan measured 747 s at 20k
-    vectors; this kernel does the same flops as dense matmuls).
-
-    Per Arrow batch the loop is over CELLS, not queries: the queries
-    probing cell c score against the cell's matrix in one
-    (nq_c × |cell|) product, chunked on the cell axis so the buffer
-    stays under ``_SCAN_CHUNK_ELEMS`` elements; each chunk emits its
-    per-query top-``take`` (full argsort — cells are ~sqrt(n) rows, so
-    the log factor is trivial and the stable id-ascending storage
-    order makes ties deterministic), and one global lexsort merges
-    chunks to the final per-query top-``take``."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _cached_broadcast,
-    )
-
-    correction = 0.5 * (centers * centers).sum(axis=1)
-    n_cells = len(centers)
-    # the inverted file (the full unit matrix, cell-grouped) ships as
-    # ONE broadcast — fetched once per worker, not re-deserialized
-    # into every task's UDF closure (r9; see _cached_broadcast)
-    bc = _cached_broadcast(
-        spark,
-        (
-            "ivf_scan",
-            id(spark.sparkContext),
-            n_cells,
-            sum(len(c) for c in cell_ids),
-            hashlib.sha1(centers.tobytes()).hexdigest(),
-            hashlib.sha1(
-                b"".join(c.tobytes() for c in cell_ids)
-            ).hexdigest(),
-            # cell_mats are payload too: digest them so a corpus whose
-            # ids and assignments coincide but whose vectors differ can
-            # never collide (same family of stale-payload bugs as the
-            # ivfpq/lsh keys, ADVICE r9)
-            hashlib.sha1(
-                b"".join(c.tobytes() for c in cell_mats)
-            ).hexdigest(),
-        ),
-        lambda: (cell_ids, cell_mats),
-    )
-
-    def scan(v):
-        cell_ids, cell_mats = bc.value
-        x = np.vstack(v.to_numpy())
-        nq = len(x)
-        cs = x @ centers.T - correction
-        t = min(nprobe, n_cells)
-        probed = np.argsort(-cs, axis=1, kind="stable")[:, :t]
-        mask = np.zeros((nq, n_cells), dtype=bool)
-        np.put_along_axis(mask, probed, True, axis=1)
-        qpos_parts, id_parts, score_parts = [], [], []
-        for c in range(n_cells):
-            cids = cell_ids[c]
-            if not len(cids):
-                continue
-            qidx = np.nonzero(mask[:, c])[0]
-            if not len(qidx):
-                continue
-            xq = x[qidx]
-            chunk = max(1, _SCAN_CHUNK_ELEMS // max(len(qidx), 1))
-            for lo in range(0, len(cids), chunk):
-                hi = min(lo + chunk, len(cids))
-                s = xq @ cell_mats[c][lo:hi].T
-                w = min(take, hi - lo)
-                top = np.argsort(-s, axis=1, kind="stable")[:, :w]
-                qpos_parts.append(np.repeat(qidx, w))
-                id_parts.append(cids[lo:hi][top].ravel())
-                score_parts.append(np.take_along_axis(s, top, axis=1).ravel())
-        if not qpos_parts:
-            empty = np.zeros(0, dtype=np.int64)
-            return pd.Series([empty] * nq)
-        qpos = np.concatenate(qpos_parts)
-        ids_all = np.concatenate(id_parts)
-        scores = np.concatenate(score_parts)
-        # (query, score desc, id asc) — lexsort keys are LAST-major
-        order = np.lexsort((ids_all, -scores, qpos))
-        qpos, ids_all = qpos[order], ids_all[order]
-        starts = np.searchsorted(qpos, np.arange(nq), side="left")
-        ends = np.searchsorted(qpos, np.arange(nq), side="right")
-        return pd.Series(
-            [
-                ids_all[s : min(s + take, e)].astype(np.int64)
-                for s, e in zip(starts, ends)
-            ]
-        )
-
-    # .asNondeterministic() is an OPTIMIZER FENCE, not a semantics
-    # change (the kernel is seeded/deterministic): without it,
-    # InferFiltersFromGenerate infers `size(result) > 0` from the
-    # downstream explode and pushes that filter — WITH the whole Arrow
-    # UDF inside it — below the fan-out exchange, re-evaluating the
-    # ENTIRE scan a second time on the raw one-full-split layout:
-    # one serial full-corpus scan on one core (r9 diagnosis; this
-    # duplicate evaluation, not density variance, was r8's measured
-    # sf10 "straggler tail"). Nondeterministic expressions cannot be
-    # duplicated or moved, so the kernel runs once, above the
-    # exchange, at the fan-out's parallelism.
-    return pandas_udf(scan, "array<long>").asNondeterministic()
-
-
-# Per-batch score-buffer budget for the in-UDF IVF scan, in float64
-# ELEMENTS (32M ≈ 256 MB) — same discipline as pq.ADC_CHUNK_ELEMS.
-_SCAN_CHUNK_ELEMS = 32_000_000
-
 # Estimated candidate pairs (n_queries × n × probed fraction) below
 # which the pair-join regime wins: its one slim shuffle is cheaper
 # than the kernel's fixed costs at small volume (measured crossover
@@ -237,17 +103,8 @@ def _probe_cells_udf(centers, nprobe: int):
         top = np.argsort(-scores, axis=1, kind="stable")[:, :take]
         return pd.Series(list(top.astype("int32")))
 
-    # .asNondeterministic() is an OPTIMIZER FENCE, not a semantics
-    # change (the kernel is seeded/deterministic): without it,
-    # InferFiltersFromGenerate infers `size(result) > 0` from the
-    # downstream explode and pushes that filter — WITH the whole Arrow
-    # UDF inside it — below the fan-out exchange, re-evaluating the
-    # ENTIRE scan a second time on the raw one-full-split layout:
-    # one serial full-corpus scan on one core (r9 diagnosis; this
-    # duplicate evaluation, not density variance, was r8's measured
-    # sf10 "straggler tail"). Nondeterministic expressions cannot be
-    # duplicated or moved, so the kernel runs once, above the
-    # exchange, at the fan-out's parallelism.
+    # optimizer fence: see similarity._broadcast_scan (the downstream
+    # explode would otherwise re-run the probe below the exchange)
     return pandas_udf(probe, "array<int>").asNondeterministic()
 
 
@@ -295,13 +152,14 @@ def ivf_topk(
     in-UDF scan took 155 s): under ``max_broadcast_bytes`` (default
     the house 256 MiB cap) the unit vectors broadcast as a
     driver-built inverted file and each Arrow batch scans its probed
-    cells with dense dgemms inside the UDF — same flops, no pair
-    rows on the wire (measured at 20k: 55 s vs 747 s, with IVF-PQ at 96 s on the same box — sf1 probe r5).  Past
+    cells with dense dgemms inside ``_broadcast_scan`` — same flops,
+    no pair rows on the wire (measured at 20k: 55 s vs 747 s, with
+    IVF-PQ at 96 s on the same box — sf1 probe r5).  Past
     the cap the pair-join path remains — it is the
     shuffle-distributed shape, and at that size the RECOMMENDED
     recall-targeted serving tier is ``ivfpq_topk`` anyway (codes are
     64× smaller, so its broadcast regime holds to ~16M vectors and
-    its sharded grid join past that; measured 5× cheaper at equal
+    its grid scan past that; measured 5× cheaper at equal
     recall).  Both regimes return identical results
     (``test_ivf_regimes_identical``).
 
@@ -311,15 +169,22 @@ def ivf_topk(
     import math
 
     from udacity_capstone_data_engineering_spark.operators.pq import (
+        _cell_major_candidates,
+        _inverted_file,
         probe_fraction_for_recall,
     )
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         BROADCAST_SCORE_MAX_BYTES,
-        _collect_unit_matrix,
+        _broadcast_scan,
+        _collect_matrix,
         _exact_rerank_pairs,
+        _rank_topk,
         _score_pairs,
         _unit_vectors,
         jl_project,
+    )
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
+        fan_out_small_scan,
     )
 
     if project_dims is not None:
@@ -380,40 +245,36 @@ def ivf_topk(
     est_pairs = n_q * n * (min(nprobe, n_centroids) / max(n_centroids, 1))
     unit_mat = None
     if n * dim * 8 <= cap and est_pairs > _PAIR_JOIN_MAX_PAIRS:
-        unit_mat = _collect_unit_matrix(emb, id_col, vec_col, dim)
+        unit_mat = _collect_matrix(emb, id_col, vec_col, dim)
     if unit_mat is not None:
         # ---- broadcast regime: in-UDF exact scan of probed cells ----
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
+        import numpy as np
 
-        cell_ids, cell_mats = _build_inverted_file(*unit_mat, centers)
+        ids, _, mat, live = unit_mat
+        ids, mat = ids[live], mat[live]
+        # cell = argmax(x·c − ½|c|²), ``_probe_cells_udf``'s rank 0, in
+        # bounded row chunks so (n × cells) scores never materialize
+        correction = 0.5 * (centers * centers).sum(axis=1)
+        cells = np.zeros(len(ids), dtype=np.int64)
+        step = 262_144
+        for lo in range(0, len(ids), step):
+            cells[lo : lo + step] = (
+                mat[lo : lo + step] @ centers.T - correction
+            ).argmax(axis=1)
         # k+8 absorbs last-ulp kernel disagreement at the cut AND the
         # self row; the final ordering below is _score_pairs' either way
-        cand = _ivf_scan_candidates_udf(
-            emb.sparkSession, centers, cell_ids, cell_mats, nprobe, take=k + 8
-        )
-        # the scan is the CPU-heavy stage: widen a narrow parquet scan
-        # so it parallelizes (no-op when partitions >= cores — the
-        # real-scale path never pays the round-robin shuffle)
-        qv = fan_out_small_scan(qv)
-        cands = (
-            qv.select(
-                F.col(id_col).alias("query_id"),
-                cand(F.col("uv")).alias("cs"),
-            )
-            .select("query_id", F.explode("cs").alias("neighbor_id"))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
+        cands = _broadcast_scan(
+            qv.select(F.col(id_col).alias("query_id"), F.col("uv").alias("qv")),
+            _inverted_file(ids, cells, mat, len(centers)),
+            lambda payload, x: _cell_major_candidates(
+                x, centers, None, *payload, nprobe, k + 8
+            ),
         )
         scored = _score_pairs(
             emb, id_col, vec_col, cands, n=n, unit=unit, unit_mat=unit_mat
         )
     else:
         # ---- past the cap: shuffle-distributed pair-join scan ----
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
         probe = _probe_cells_udf(centers, nprobe)
         # Persisted when self-serving: both branches below (assignment +
         # probes) read it, and without the persist each branch would
@@ -446,11 +307,4 @@ def ivf_topk(
             F.col("query_id") != F.col("neighbor_id")
         ).select("query_id", "neighbor_id")
         scored = _score_pairs(emb, id_col, vec_col, cands, n=n, unit=unit)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return _rank_topk(scored, k)

@@ -29,25 +29,22 @@ Pipeline:
      then get EXACT cosine scoring and the final top-k — the standard
      two-stage that recovers most recall lost to quantization.
 
-Scale shape — two regimes, switched on MEASURED index bytes:
+Scale shape — two regimes, switched on MEASURED index bytes
+(n·(8+m) — uint8 codes plus the int64 id), both through the shared
+scan runners of ``similarity.py`` with the SAME block scorers, so they
+return identical rows (the forced-cap equality tests pin it):
 
-  * UNDER the broadcast cap (n·(8+m) bytes ≤ 256 MiB ≈ 16M vectors at
-    m=8): the code matrix broadcasts; candidate generation is one
-    Arrow pass over the queries.
-  * PAST the cap: the SHARDED path (VERDICT r3 #2).  Codes stay a
-    DataFrame, hash-sharded so every shard fits the cap; queries are
-    hash-blocked; a cogrouped ``applyInPandas`` grid join scans each
-    (query-block × shard) cell with the SAME chunked ADC kernel
-    (bit-identical floats), emits per-shard top-``rerank``
-    candidates, and a query-keyed window merges shards to the global
-    top-``rerank`` — ties broken (ADC desc, id asc) exactly like the
-    broadcast kernel, so both regimes return identical results (the
-    forced-cap equality test pins this).  Replication cost is the
-    standard grid-join trade: codes ×query-blocks, queries ×shards.
+  * UNDER the broadcast cap (256 MiB ≈ 16M vectors at m=8):
+    ``_broadcast_scan`` ships the code matrix (or, for IVF-PQ, the
+    coded inverted file) once; candidate generation is one Arrow pass
+    over the queries.
+  * PAST the cap (VERDICT r3 #2): ``_grid_scan`` — codes stay a
+    DataFrame, hash-sharded (IVF-PQ packs whole cells into shards,
+    ``_pack_cells_to_shards``), and the shard merge keeps (ADC desc,
+    id asc), the broadcast kernel's tie rule.
 
 At 100 TB pair PQ with the IVF cell filter (IVF-PQ below) so each
-query scans only probed cells' codes; the sharded regime then shards
-BY CELL and each query visits only its probed cells.
+query scans only probed cells' codes.
 """
 
 from __future__ import annotations
@@ -66,8 +63,9 @@ ADC_CHUNK_ELEMS = 32_000_000
 # short-gather slow path, larger spills shared L3).
 _ADC_ACC_COLS = 2048
 
-# Target rows per query block in the sharded grid join — bounds the
-# per-task pandas group (block × dim doubles) and the score buffer.
+# Target rows per query block in every grid scan (LSH, PQ, IVF-PQ;
+# ``similarity._grid_scan``) — bounds the per-task pandas group
+# (block × dim doubles) and the score buffer.
 ADC_QUERY_BLOCK_ROWS = 4096
 
 
@@ -167,7 +165,7 @@ def _query_luts(x, books):
     loop, NOT a shape-adaptive BLAS kernel), so each LUT entry is a
     pure function of (query row, codebook row) regardless of how the
     query block is composed (ADVICE r4): the broadcast kernel's Arrow
-    batches and the sharded grid's hash blocks slice queries
+    batches and the grid scan's hash blocks slice queries
     differently, and dgemm/dgemv results may differ in the last ulp
     across shapes — einsum makes LUTs, and with the fixed per-subspace
     accumulation order every downstream ADC score, bit-identical
@@ -266,60 +264,6 @@ def _adc_top_block(luts, ids, codes, take):
     )
 
 
-def _adc_candidates_udf(spark, books, ids, codes, rerank: int):
-    """pandas_udf: unit query vector → array<long> of the ``rerank``
-    best candidate ids by ADC score over the broadcast code matrix
-    (ONE broadcast per corpus — fetched once per worker, not
-    re-deserialized into every task's closure; r9, see
-    ``similarity._cached_broadcast``).
-
-    The scan is the chunked tournament (``_adc_top_block``) — the
-    score buffer is ~256 MB per Arrow batch regardless of corpus
-    size.  Ties break toward the LOWER vec_id, so candidate sets are
-    deterministic."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _cached_broadcast,
-    )
-
-    bc = _cached_broadcast(
-        spark,
-        (
-            "adc_scan",
-            id(spark.sparkContext),
-            codes.shape,
-            hashlib.sha1(codes.tobytes()).hexdigest(),
-            hashlib.sha1(ids.tobytes()).hexdigest(),
-        ),
-        lambda: (ids, codes),
-    )
-
-    def cand(v):
-        b_ids, b_codes = bc.value
-        x = np.vstack(v.to_numpy())
-        luts = _query_luts(x, books)
-        top_i, _ = _adc_top_block(luts, b_ids, b_codes, rerank)
-        return pd.Series(list(top_i))
-
-    # .asNondeterministic() is an OPTIMIZER FENCE, not a semantics
-    # change (the kernel is seeded/deterministic): without it,
-    # InferFiltersFromGenerate infers `size(result) > 0` from the
-    # downstream explode and pushes that filter — WITH the whole Arrow
-    # UDF inside it — below the fan-out exchange, re-evaluating the
-    # ENTIRE scan a second time on the raw one-full-split layout:
-    # one serial full-corpus scan on one core (r9 diagnosis; this
-    # duplicate evaluation, not density variance, was r8's measured
-    # sf10 "straggler tail"). Nondeterministic expressions cannot be
-    # duplicated or moved, so the kernel runs once, above the
-    # exchange, at the fan-out's parallelism.
-    return pandas_udf(cand, "array<long>").asNondeterministic()
-
-
 def _compact_candidate_partials(qpos, cids, cscores, nq, rerank):
     """Reduce accumulated (query, id, score) candidate partials to each
     query's top-``rerank`` by the merge key (query, score desc, id asc)
@@ -340,16 +284,20 @@ def _compact_candidate_partials(qpos, cids, cscores, nq, rerank):
 
 
 def _cell_major_candidates(
-    x, centers, books, cell_ids, cell_codes, nprobe, rerank,
+    x, centers, books, cell_ids, cell_rows, nprobe, rerank,
     compact_elems=None, return_partials=False,
 ):
-    """CELL-MAJOR ADC scan over a query batch (r10): probe each query's
-    ``nprobe`` nearest cells, score each cell once for ALL the queries
-    probing it as one fancy-indexed LUT gather (chunked on the cell
-    axis under ``ADC_CHUNK_ELEMS``), keep per-chunk top-``rerank``
-    partials, and merge with one (query, score desc, id asc) lexsort.
-    Selection- and order-identical to the old per-query loop (see the
-    r10 notes in SCALING.md).
+    """CELL-MAJOR scan of an inverted file for a query batch: probe
+    each query's ``nprobe`` nearest cells, score each cell once for ALL
+    the queries probing it (chunked on the cell axis under
+    ``ADC_CHUNK_ELEMS``), keep per-chunk top-``rerank`` partials, and
+    merge with one (query, score desc, id asc) lexsort.
+
+    The per-cell scorer depends on what the cells hold: with ``books``
+    the rows are PQ codes and a chunk scores as one fancy-indexed LUT
+    gather per subspace (``_query_luts`` — shape-invariant einsum, so
+    every regime sees bit-identical ADC scores); with ``books=None``
+    they are unit vectors (IVF) and a chunk scores as one exact dgemm.
 
     ``compact_elems`` (ADVICE r10, the memory bound): whenever the
     accumulated partial count exceeds this many elements, compact to
@@ -362,15 +310,28 @@ def _cell_major_candidates(
     ``test_cell_major_compaction_lossless``.
 
     Returns a list of ``nq`` int64 id arrays (each ≤ ``rerank``) — or,
-    with ``return_partials=True``, the compacted ``(qpos, ids, adc)``
-    arrays themselves (sorted by the merge key), which the sharded
-    grid kernel emits so the cross-shard window can re-merge on the
-    identical (query, adc desc, id asc) rule."""
+    with ``return_partials=True``, the compacted ``(qpos, ids, score)``
+    arrays themselves (sorted by the merge key), which the grid scan
+    emits so the cross-shard window can re-merge on the identical
+    (query, score desc, id asc) rule."""
     import numpy as np
 
     if compact_elems is None:
         compact_elems = ADC_CHUNK_ELEMS
-    m = books.shape[0]
+    if books is None:
+
+        def score(qidx, rows):
+            return x[qidx] @ rows.T
+
+    else:
+        luts = _query_luts(x, books)
+
+        def score(qidx, rows):
+            scores = luts[0][qidx][:, rows[:, 0]]
+            for s in range(1, len(luts)):
+                scores += luts[s][qidx][:, rows[:, s]]
+            return scores
+
     correction = 0.5 * (centers * centers).sum(axis=1)
     nq = len(x)
     n_cells = len(cell_ids)
@@ -379,10 +340,6 @@ def _cell_major_candidates(
     probed = np.argsort(-cell_scores, axis=1, kind="stable")[:, :take_cells]
     mask = np.zeros((nq, n_cells), dtype=bool)
     np.put_along_axis(mask, probed, True, axis=1)
-    # batch-level shape-invariant LUTs (same einsum kernel as the
-    # sharded grid — ADVICE r4: per-query dgemv here vs the shard
-    # path's dgemm could differ in the last ulp)
-    luts = _query_luts(x, books)
     qpos_parts, id_parts, score_parts = [], [], []
     acc_elems = 0
     empty = np.zeros(0, dtype=np.int64)
@@ -394,14 +351,10 @@ def _cell_major_candidates(
         qidx = np.nonzero(mask[:, c])[0]
         if not len(qidx):
             continue
-        codes_c = cell_codes[c]
-        qluts = [luts[s][qidx] for s in range(m)]
         chunk = max(256, ADC_CHUNK_ELEMS // max(len(qidx), 1))
         for lo in range(0, len(ids_c), chunk):
             hi = min(lo + chunk, len(ids_c))
-            scores = qluts[0][:, codes_c[lo:hi, 0]].copy()
-            for s in range(1, m):
-                scores += qluts[s][:, codes_c[lo:hi, s]]
+            scores = score(qidx, cell_rows[c][lo:hi])
             w = min(rerank, hi - lo)
             top = np.argsort(-scores, axis=1, kind="stable")[:, :w]
             qpos_parts.append(np.repeat(qidx, w))
@@ -427,7 +380,7 @@ def _cell_major_candidates(
     qpos, cids, cscores = _compact_candidate_partials(
         np.concatenate(qpos_parts),
         np.concatenate(id_parts),
-        np.concatenate(score_parts) if score_parts else empty_f,
+        np.concatenate(score_parts),
         nq,
         rerank,
     )
@@ -441,151 +394,19 @@ def _cell_major_candidates(
     ]
 
 
-def _ivfpq_candidates_udf(
-    spark, centers, books, cell_ids, cell_codes, nprobe, rerank
-):
-    """pandas_udf: unit query vector → array<long> of the ``rerank``
-    best candidate ids by ADC score over ONLY the query's ``nprobe``
-    nearest cells' codes — the inverted-file filter that makes the
-    scan sub-linear. Deterministic: stable argsorts + id-sorted cells.
-    The coded inverted file ships as ONE broadcast (fetched once per
-    worker, not re-deserialized per task; r9)."""
-    import hashlib
-
+def _inverted_file(ids, cells, rows, n_cells: int):
+    """Per-cell ``(ids ASCENDING, matching rows)`` lists from parallel
+    id / cell-label / row arrays — the one inverted-file builder of
+    IVF (unit-vector rows), IVF-PQ and the standing index (code
+    rows), driver-side and per grid shard alike."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _cached_broadcast,
-    )
-
-    bc = _cached_broadcast(
-        spark,
-        (
-            "ivfpq_scan",
-            id(spark.sparkContext),
-            len(cell_ids),
-            sum(len(c) for c in cell_ids),
-            hashlib.sha1(centers.tobytes()).hexdigest(),
-            hashlib.sha1(
-                b"".join(c.tobytes() for c in cell_ids)
-            ).hexdigest(),
-            # the codes are part of the payload and depend on (m, ksub)
-            # even when centers/cells are identical: without this digest
-            # a second ivfpq_topk in the same session with a different
-            # ksub would silently serve the first call's stale codes
-            # against the new LUTs (ADVICE r9)
-            hashlib.sha1(
-                b"".join(c.tobytes() for c in cell_codes)
-            ).hexdigest(),
-        ),
-        lambda: (cell_ids, cell_codes),
-    )
-
-    def cand(v):
-        # CELL-MAJOR scan (r10): the old per-query loop concatenated
-        # the query's ~nprobe probed cells' arrays per query — at the
-        # third-decade probe (2M vectors, nprobe≈1060) that is ~1M
-        # python-level concatenations per 1k queries, enough gather
-        # overhead that IVF-PQ measured SLOWER than flat PQ despite
-        # scanning 25% less (SCALING.md r10). The cell-major body
-        # (one fancy-indexed LUT gather per cell for all the queries
-        # probing it, chunked, partials merged by lexsort, accumulation
-        # BOUNDED by running compaction — ADVICE r10) lives in
-        # _cell_major_candidates; selection is SET- and ORDER-identical
-        # to the per-query path (same einsum LUTs, same s-major
-        # accumulation order, same (query, score desc, id asc) key).
-        cell_ids, cell_codes = bc.value
-        x = np.vstack(v.to_numpy())
-        return pd.Series(
-            _cell_major_candidates(
-                x, centers, books, cell_ids, cell_codes, nprobe, rerank
-            )
-        )
-
-    # .asNondeterministic() is an OPTIMIZER FENCE, not a semantics
-    # change (the kernel is seeded/deterministic): without it,
-    # InferFiltersFromGenerate infers `size(result) > 0` from the
-    # downstream explode and pushes that filter — WITH the whole Arrow
-    # UDF inside it — below the fan-out exchange, re-evaluating the
-    # ENTIRE scan a second time on the raw one-full-split layout:
-    # one serial full-corpus scan on one core (r9 diagnosis; this
-    # duplicate evaluation, not density variance, was r8's measured
-    # sf10 "straggler tail"). Nondeterministic expressions cannot be
-    # duplicated or moved, so the kernel runs once, above the
-    # exchange, at the fan-out's parallelism.
-    return pandas_udf(cand, "array<long>").asNondeterministic()
-
-
-def _sharded_adc_candidates(
-    queries, probes, coded, books, rerank: int, n_queries: int
-):
-    """The past-the-cap ADC scan (VERDICT r3 #2): a cogrouped grid
-    join instead of a broadcast index.
-
-    ``queries``  — (query_id, uv) unit query vectors.
-    ``probes``   — (query_id, __shard): which shards each query must
-                   scan (every shard for plain PQ; the probed cells
-                   for IVF-PQ).
-    ``coded``    — (id, codes, __shard): the distributed code index,
-                   every shard under the broadcast cap.
-
-    Queries are hash-blocked (``ADC_QUERY_BLOCK_ROWS`` per block) so a
-    task's pandas group holds one bounded query block × one bounded
-    shard; the kernel is the same chunked ADC tournament as the
-    broadcast path, so per-(query, row) scores are bit-identical and
-    the query-keyed window merge (ADC desc, id asc, row_number ≤
-    rerank) selects exactly the set the one-shot kernel would.
-
-    Returns (query_id, neighbor_id) candidate pairs."""
-    import numpy as np
-    import pandas as pd
-
-    spark = queries.sparkSession
-    n_blocks = max(1, -(-n_queries // ADC_QUERY_BLOCK_ROWS))
-    left = (
-        probes.join(queries, "query_id")
-        .withColumn(
-            "__qb", F.pmod(F.xxhash64("query_id"), F.lit(n_blocks)).cast("int")
-        )
-    )
-    right = coded.crossJoin(
-        F.broadcast(
-            spark.range(n_blocks).select(F.col("id").cast("int").alias("__qb"))
-        )
-    )
-
-    def scan(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "adc": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "adc": "f8"})
-        rpdf = rpdf.sort_values("id")
-        ids = rpdf["id"].to_numpy(dtype=np.int64)
-        codes = np.vstack(rpdf["codes"].to_numpy()).astype(np.uint8)
-        x = np.vstack(lpdf["uv"].to_numpy())
-        qids = lpdf["query_id"].to_numpy(dtype=np.int64)
-        top_i, top_s = _adc_top_block(_query_luts(x, books), ids, codes, rerank)
-        w = top_i.shape[1]
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, w),
-                "neighbor_id": top_i.ravel(),
-                "adc": top_s.ravel(),
-            }
-        )
-
-    out = (
-        left.groupBy("__shard", "__qb")
-        .cogroup(right.groupBy("__shard", "__qb"))
-        .applyInPandas(scan, "query_id long, neighbor_id long, adc double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), "neighbor_id")
+    order = np.lexsort((ids, cells))
+    ids, cells, rows = ids[order], cells[order], rows[order]
+    bounds = np.searchsorted(cells, np.arange(n_cells + 1))
     return (
-        out.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= rerank)
-        .select("query_id", "neighbor_id")
+        [ids[bounds[c] : bounds[c + 1]] for c in range(n_cells)],
+        [rows[bounds[c] : bounds[c + 1]] for c in range(n_cells)],
     )
 
 
@@ -629,154 +450,112 @@ def _pack_cells_to_shards(counts: dict, row_bytes: int, cap: int):
     return mapping_rows, max(1, len(remaining)), nsub
 
 
-def _sharded_ivfpq_candidates(
-    qframe, coded_cells, centers, books, nprobe, rerank, n_queries, cap
-):
-    """The past-the-cap IVF-PQ scan (r11 rewrite): a cogrouped grid
-    join over CELL-PACKED shards.
+def _ivfpq_pairs(
+    qframe, coded, centers, books, nprobe, rerank, n: int, n_q: int, cap: int
+) -> DataFrame:
+    """IVF-PQ candidate pairs — the scan tail shared by ``ivfpq_topk``
+    and the standing index (``ann_index.ann_topk_against_index``).
 
-    ``qframe``      — (query_id, uv) unit query vectors.
-    ``coded_cells`` — (id, cell, codes): the distributed inverted
-                      file, cell assignment already materialized.
-
-    Cells pack into byte-capped shards (``_pack_cells_to_shards``);
-    queries join only the shards holding ≥1 of their probed cells.
-    Inside each (query-block × shard) task the kernel re-derives each
-    query's probed-cell set from the broadcast centroids — the same
-    ``argsort(-(x·cᵀ − ½|c|²))`` selection as ``_probe_cells_udf``, so
-    nothing per-query ships besides the vector — and runs the SAME
-    bounded cell-major ADC scan as the broadcast kernel restricted to
-    this shard's cells, emitting per-(query, shard) top-``rerank``
-    (adc, id) partials. The cross-shard window merges on the identical
-    (query, adc desc, id asc) key; per-(query,row) scores are
-    shard-independent (einsum LUTs, s-major accumulation), so the
-    merged set is exactly the broadcast kernel's (forced-cap equality
-    tests, including the sub-shard split cap).
-
-    Returns (query_id, neighbor_id) candidate pairs."""
+    ``qframe`` is ``(query_id, qv)`` unit queries; ``coded`` the
+    inverted file as a DataFrame ``(id, cell, codes)``. Under the cap
+    it is collected into per-cell lists and scanned through
+    ``_broadcast_scan``; past it ``_grid_scan`` runs over CELL-PACKED
+    shards (``_pack_cells_to_shards``, hot cells hash-split first so
+    the per-task bound holds under any skew — ADVICE r4), each query
+    joins only the shards holding one of its probed cells, and each
+    grid cell re-derives the query's probes from the centroids and
+    runs the same cell-major scan on its shard's cells. Per-(query,
+    row) ADC scores are shard-independent, so both regimes select the
+    same rows."""
     import numpy as np
-    import pandas as pd
 
     from udacity_capstone_data_engineering_spark.operators.ivf import (
         _probe_cells_udf,
     )
-
-    spark = qframe.sparkSession
-    m = books.shape[0]
-    row_bytes = 8 + m
-    n_cells_total = len(centers)
-    # bounded Arrow boundary: cells × count = √n rows to the driver
-    cnt_pdf = (
-        coded_cells.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .toPandas()
-    )
-    counts = dict(
-        zip(
-            cnt_pdf["cell"].astype(int).tolist(),
-            cnt_pdf["cnt"].astype(int).tolist(),
-        )
-    )
-    # the grid's task count is n_shards × n_blocks: a one-block query
-    # batch against the minimum byte-driven shard count would run on a
-    # handful of cores. Shards may be FINER than the cap requires
-    # (per-(query,row) scores are shard-independent; cells partition,
-    # not replicate), so shrink the effective packing cap until the
-    # shard count reaches ~2 tasks/core.
-    n_blocks = max(1, -(-n_queries // ADC_QUERY_BLOCK_ROWS))
-    par = max(1, spark.sparkContext.defaultParallelism)
-    min_shards = min(-(-2 * par // n_blocks), 4 * par)
-    total_bytes = sum(counts.values()) * row_bytes
-    eff_cap = (
-        max(1, min(cap, -(-total_bytes // max(min_shards, 1))))
-        if counts
-        else cap
-    )
-    mapping_rows, n_shards, nsub = _pack_cells_to_shards(
-        counts, row_bytes, eff_cap
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _broadcast_scan,
+        _grid_scan,
     )
     from udacity_capstone_data_engineering_spark.session import local_df
 
-    mapping = local_df(
-        spark, mapping_rows or [(0, 0, 0)], "cell int, __sub int, __shard int"
-    )
-    nsub_df = local_df(
-        spark, sorted(nsub.items()) or [(0, 1)], "cell int, __nsub int"
-    )
-    coded = (
-        coded_cells.join(F.broadcast(nsub_df), "cell")
-        .withColumn(
-            "__sub", F.pmod(F.xxhash64("id"), F.col("__nsub")).cast("int")
-        )
-        .join(F.broadcast(mapping), ["cell", "__sub"])
-        .select("id", "cell", "codes", "__shard")
-    )
-    probe = _probe_cells_udf(centers, nprobe)
-    # an INDEPENDENT cell→shard relation for the probe side (sharing
-    # the `mapping` frame across both cogroup lineages trips Spark's
-    # ambiguous-self-join analysis on __shard)
-    probe_mapping = local_df(
-        spark,
-        sorted({(c, s) for c, _j, s in mapping_rows}) or [(0, 0)],
-        "cell int, __shard int",
-    )
-    probes = (
-        qframe.select(
-            "query_id", F.explode(probe(F.col("uv"))).alias("cell")
-        )
-        .join(F.broadcast(probe_mapping), "cell")
-        .select("query_id", "__shard")
-        .distinct()
-    )
-    left = probes.join(qframe, "query_id").withColumn(
-        "__qb", F.pmod(F.xxhash64("query_id"), F.lit(n_blocks)).cast("int")
-    )
-    right = coded.crossJoin(
-        F.broadcast(
-            spark.range(n_blocks).select(F.col("id").cast("int").alias("__qb"))
-        )
-    )
+    n_cells = len(centers)
+    row_bytes = 8 + books.shape[0]
 
-    def scan(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "adc": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "adc": "f8"})
-        rpdf = rpdf.sort_values(["cell", "id"])
-        cells_arr = rpdf["cell"].to_numpy(dtype=np.int64)
-        ids = rpdf["id"].to_numpy(dtype=np.int64)
-        codes = np.vstack(rpdf["codes"].to_numpy()).astype(np.uint8)
-        bounds = np.searchsorted(cells_arr, np.arange(n_cells_total + 1))
-        cell_ids = [
-            ids[bounds[c] : bounds[c + 1]] for c in range(n_cells_total)
-        ]
-        cell_codes = [
-            codes[bounds[c] : bounds[c + 1]] for c in range(n_cells_total)
-        ]
-        x = np.vstack(lpdf["uv"].to_numpy())
-        qids = lpdf["query_id"].to_numpy(dtype=np.int64)
+    def arrays(pdf):
+        codes = (
+            np.vstack(pdf["codes"].to_numpy()).astype(np.uint8)
+            if len(pdf)
+            else np.zeros((0, books.shape[0]), dtype=np.uint8)
+        )
+        return _inverted_file(
+            pdf["id"].to_numpy(dtype=np.int64),
+            pdf["cell"].to_numpy(dtype=np.int64),
+            codes,
+            n_cells,
+        )
+
+    if n * row_bytes <= cap:
+        return _broadcast_scan(
+            qframe,
+            arrays(coded.select("id", "cell", "codes").toPandas()),
+            lambda payload, x: _cell_major_candidates(
+                x, centers, books, *payload, nprobe, rerank
+            ),
+        )
+
+    # bounded Arrow boundary: cells × count = √n rows to the driver
+    cnt_pdf = coded.groupBy("cell").agg(F.count(F.lit(1)).alias("cnt")).toPandas()
+    counts = dict(
+        zip(cnt_pdf["cell"].astype(int).tolist(), cnt_pdf["cnt"].astype(int).tolist())
+    )
+    total_bytes = sum(counts.values()) * row_bytes
+    spark = qframe.sparkSession
+
+    def assign(n_shards):
+        mapping_rows, _, nsub = _pack_cells_to_shards(
+            counts, row_bytes, max(1, -(-total_bytes // n_shards))
+        )
+        mapping = local_df(
+            spark, mapping_rows or [(0, 0, 0)], "cell int, __sub int, __shard int"
+        )
+        nsub_df = local_df(
+            spark, sorted(nsub.items()) or [(0, 1)], "cell int, __nsub int"
+        )
+        corpus = (
+            coded.join(F.broadcast(nsub_df), "cell")
+            .withColumn(
+                "__sub", F.pmod(F.xxhash64("id"), F.col("__nsub")).cast("int")
+            )
+            .join(F.broadcast(mapping), ["cell", "__sub"])
+            .select("id", "cell", "codes", "__shard")
+        )
+        # an INDEPENDENT cell→shard relation for the probe side (sharing
+        # `mapping` across both cogroup lineages trips Spark's
+        # ambiguous-self-join analysis on __shard)
+        probe_mapping = local_df(
+            spark,
+            sorted({(c, s) for c, _j, s in mapping_rows}) or [(0, 0)],
+            "cell int, __shard int",
+        )
+        probe = _probe_cells_udf(centers, nprobe)
+        probes = (
+            qframe.select("query_id", F.explode(probe(F.col("qv"))).alias("cell"))
+            .join(F.broadcast(probe_mapping), "cell")
+            .select("query_id", "__shard")
+            .distinct()
+        )
+        return corpus, probes
+
+    def grid_block(lpdf, rpdf):
+        x = np.vstack(lpdf["qv"].to_numpy())
         qpos, cids, cscores = _cell_major_candidates(
-            x, centers, books, cell_ids, cell_codes, nprobe, rerank,
+            x, centers, books, *arrays(rpdf), nprobe, rerank,
             return_partials=True,
         )
-        return pd.DataFrame(
-            {
-                "query_id": qids[qpos],
-                "neighbor_id": cids,
-                "adc": cscores,
-            }
-        )
+        return lpdf["query_id"].to_numpy(dtype=np.int64)[qpos], cids, cscores
 
-    out = (
-        left.groupBy("__shard", "__qb")
-        .cogroup(right.groupBy("__shard", "__qb"))
-        .applyInPandas(scan, "query_id long, neighbor_id long, adc double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), "neighbor_id")
-    return (
-        out.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= rerank)
-        .select("query_id", "neighbor_id")
+    return _grid_scan(
+        qframe, coded, grid_block, rerank, n_q, total_bytes, cap, assign=assign
     )
 
 
@@ -817,18 +596,11 @@ def ivfpq_topk(
     ``target_recall=None`` to fall back to the speed-first 1/4
     fraction, or pin ``nprobe`` explicitly.
 
-    Past the broadcast cap the inverted file STAYS DISTRIBUTED and
-    the scan becomes the CELL-PACKED grid join
-    (``_sharded_ivfpq_candidates``, r11): cells pack into byte-capped
-    shards (hot cells hash-split first, so the per-task bound is
-    ENFORCED under any skew — ADVICE r4), queries join only shards
-    holding their probed cells, and the per-(query, shard) top-rerank
-    cut binds because a shard holds ~cap/row_bytes rows ≫ rerank
-    (shard-per-cell, the r4 design, let every probed row through to
-    the merge window).  Under the cap, the classic driver-collected
-    broadcast inverted file.  Both regimes return identical results
-    (forced-cap equality tests, including a cap small enough to force
-    sub-shard splits).
+    Under the broadcast cap the coded inverted file is collected and
+    broadcast; past it the inverted file STAYS DISTRIBUTED and the
+    scan runs over cell-packed shards (``_ivfpq_pairs``). Both regimes
+    return identical results (forced-cap equality tests, including a
+    cap small enough to force sub-shard splits).
 
     ``queries``: optional serving WORKLOAD — a DataFrame with the same
     ``id_col``/``vec_col`` columns whose ids are a subset of the
@@ -839,15 +611,17 @@ def ivfpq_topk(
     self-topk behavior."""
     import math
 
-    import numpy as np
-
     from udacity_capstone_data_engineering_spark.operators.ivf import (
         _fit_centroids,
     )
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         BROADCAST_SCORE_MAX_BYTES,
+        _rank_topk,
         _score_pairs,
         _unit_vectors,
+    )
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
+        fan_out_small_scan,
     )
 
     cap = (
@@ -874,6 +648,32 @@ def ivfpq_topk(
     )
 
     unit = _unit_vectors(emb, id_col, vec_col)
+    v, qframe, n_q = _query_frame(unit, queries, id_col, vec_col, n)
+    encode = _encode_udf(books)
+    assign = _probe1_cell_udf(centers)
+    # fan out before the CPU-heavy encode/assign UDFs: a one-file
+    # corpus otherwise runs the whole encode as ONE task (r8, observed
+    # 13 serial CPU-minutes at 200k vectors in the sf10 probe). No-op
+    # at real scale.
+    coded = fan_out_small_scan(v, n_rows=n).select(
+        F.col(id_col).alias("id"),
+        assign(F.col("uv")).cast("int").alias("cell"),
+        encode(F.col("uv")).alias("codes"),
+    )
+    pairs = _ivfpq_pairs(
+        qframe, coded, centers, books, nprobe, rerank, n, n_q, cap
+    )
+    return _rank_topk(_score_pairs(emb, id_col, vec_col, pairs, n=n, unit=unit), k)
+
+
+def _query_frame(unit, queries, id_col, vec_col, n):
+    """``(valid corpus unit rows, (query_id, qv) unit queries, query
+    count)`` for the PQ-family operators: the corpus itself unless a
+    serving workload ``queries`` is given."""
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _unit_vectors,
+    )
+
     v = unit.filter(F.col("uv").isNotNull())
     if queries is None:
         qv, n_q = v, n
@@ -882,94 +682,7 @@ def ivfpq_topk(
             F.col("uv").isNotNull()
         )
         n_q = queries.count()
-    encode = _encode_udf(books)
-    assign = _probe1_cell_udf(centers)
-
-    # one byte per subspace + the int64 id — the bytes actually shipped
-    index_bytes = n * (8 + m)
-    if index_bytes > cap:
-        # ---- sharded regime (r11 rewrite): cells PACK into
-        # byte-capped shards and the grid kernel re-derives per-query
-        # probes in-task — see _sharded_ivfpq_candidates for why
-        # shard-per-cell (the r4 design) defeated the per-shard
-        # top-rerank cut and would have flooded the merge window with
-        # nq·probe_fraction·n rows at the fourth decade.
-        coded_cells = v.select(
-            F.col(id_col).alias("id"),
-            assign(F.col("uv")).cast("int").alias("cell"),
-            encode(F.col("uv")).alias("codes"),
-        )
-        qframe = qv.select(F.col(id_col).alias("query_id"), "uv")
-        pairs = _sharded_ivfpq_candidates(
-            qframe, coded_cells, centers, books, nprobe, rerank,
-            n_queries=n_q, cap=cap,
-        ).filter(F.col("query_id") != F.col("neighbor_id"))
-    else:
-        # fan out before the CPU-heavy encode/assign UDFs: a one-file
-        # corpus otherwise runs the whole encode as ONE task (r8,
-        # observed 13 serial CPU-minutes at 200k vectors in the sf10
-        # probe); the orderBy keeps the collected layout deterministic
-        # regardless of the fan-out shuffle. No-op at real scale.
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        encoded = (
-            fan_out_small_scan(v, n_rows=n)
-            .select(
-                F.col(id_col),
-                assign(F.col("uv")).alias("cell"),
-                encode(F.col("uv")).alias("codes"),
-            )
-            .toPandas()
-        )
-        ids = np.asarray(encoded[id_col].to_numpy(), dtype=np.int64)
-        cells = np.asarray(encoded["cell"].to_numpy(), dtype=np.int64)
-        codes = (
-            np.vstack(encoded["codes"].to_numpy()).astype(np.uint8)
-            if len(encoded)
-            else np.zeros((0, m), dtype=np.uint8)
-        )
-        # Deterministic layout via a driver-side stable sort instead of
-        # an orderBy: ids are unique, so the order is identical, and the
-        # collect job loses its global sort exchange (guide §2.4 — the
-        # sort only existed to undo the fan-out shuffle's row order).
-        order = np.argsort(ids, kind="stable")
-        ids, cells, codes = ids[order], cells[order], codes[order]
-        # the inverted file: per cell, (ids, codes) in id order
-        cell_ids, cell_codes = [], []
-        for c in range(len(centers)):
-            mask = cells == c
-            cell_ids.append(ids[mask])
-            cell_codes.append(codes[mask])
-
-        cand = _ivfpq_candidates_udf(
-            emb.sparkSession, centers, books, cell_ids, cell_codes,
-            nprobe, rerank,
-        )
-        # the ADC scan is the CPU-heavy stage: widen a narrow parquet
-        # scan so it parallelizes (no-op at real scale)
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        qv = fan_out_small_scan(qv)
-        pairs = (
-            qv.select(
-                F.col(id_col).alias("query_id"), cand(F.col("uv")).alias("cs")
-            )
-            .select("query_id", F.explode("cs").alias("neighbor_id"))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    scored = _score_pairs(emb, id_col, vec_col, pairs, n=n, unit=unit)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return v, qv.select(F.col(id_col).alias("query_id"), F.col("uv").alias("qv")), n_q
 
 
 def rerank_budget(
@@ -1102,11 +815,10 @@ def pq_topk(
     deterministic (seeded fit, stable argsort, id tiebreaks).
 
     Under the measured broadcast cap (n·(8+m) bytes — uint8 codes are
-    what actually ships) the index broadcasts; past it the scan
-    switches to the hash-sharded cogroup grid join
-    (``_sharded_adc_candidates``) with identical results — the
-    refuse-don't-degrade ValueError this replaced is gone (VERDICT r3
-    #2).
+    what actually ships) the code matrix goes through
+    ``_broadcast_scan``; past it the same chunked ADC tournament runs
+    per shard through ``_grid_scan``, with identical results (VERDICT
+    r3 #2).
 
     ``rerank=None`` auto-sizes to a CONSTANT FRACTION of the corpus
     via the measured ``rerank_budget`` curve (VERDICT r8 #5) at the
@@ -1126,8 +838,14 @@ def pq_topk(
 
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         BROADCAST_SCORE_MAX_BYTES,
+        _broadcast_scan,
+        _grid_scan,
+        _rank_topk,
         _score_pairs,
         _unit_vectors,
+    )
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
+        fan_out_small_scan,
     )
 
     cap = (
@@ -1148,62 +866,35 @@ def pq_topk(
     )
 
     unit = _unit_vectors(emb, id_col, vec_col)
-    v = unit.filter(F.col("uv").isNotNull())
-    if queries is None:
-        qv, n_q = v, n
-    else:
-        qv = _unit_vectors(queries, id_col, vec_col).filter(
-            F.col("uv").isNotNull()
-        )
-        n_q = queries.count()
+    v, qframe, n_q = _query_frame(unit, queries, id_col, vec_col, n)
     encode = _encode_udf(books)
+    # fan out before the CPU-heavy encode UDF (r8, as in ivfpq_topk)
+    coded = fan_out_small_scan(v, n_rows=n).select(
+        F.col(id_col).alias("id"), encode(F.col("uv")).alias("codes")
+    )
+
+    def adc_top(x, ids, codes):
+        return _adc_top_block(_query_luts(x, books), ids, codes, rerank)
 
     index_bytes = n * (8 + m)
     if index_bytes > cap:
-        # ---- sharded regime: hash shards, each under the cap; at
-        # least ~2 tasks/core (r11 — the grid's task count is
-        # n_shards × n_blocks, and a one-block serving batch against
-        # the minimum byte-driven shard count would idle most of the
-        # cluster) ----
-        par = max(1, emb.sparkSession.sparkContext.defaultParallelism)
-        blocks_est = max(1, -(-n_q // ADC_QUERY_BLOCK_ROWS))
-        n_shards = max(
-            2,
-            -(-index_bytes // max(cap, 1)),
-            min(-(-2 * par // blocks_est), 4 * par),
-        )
-        coded = v.select(
-            F.col(id_col).alias("id"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
-            .cast("int")
-            .alias("__shard"),
-            encode(F.col("uv")).alias("codes"),
-        )
-        qsrc = qv.select(F.col(id_col).alias("query_id"), "uv")
-        spark = emb.sparkSession
-        probes = qsrc.select("query_id").crossJoin(
-            F.broadcast(
-                spark.range(n_shards).select(
-                    F.col("id").cast("int").alias("__shard")
-                )
-            )
-        )
-        pairs = _sharded_adc_candidates(
-            qsrc, probes, coded, books, rerank, n_queries=n_q
-        ).filter(F.col("query_id") != F.col("neighbor_id"))
-    else:
-        # fan out before the CPU-heavy encode UDF — same single-task
-        # serialization fix as the IVF-PQ branch above (r8).
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
 
-        encoded = (
-            fan_out_small_scan(v, n_rows=n)
-            .select(F.col(id_col), encode(F.col("uv")).alias("codes"))
-            .toPandas()
+        def grid_block(lpdf, rpdf):
+            rpdf = rpdf.sort_values("id")
+            top_i, top_s = adc_top(
+                np.vstack(lpdf["qv"].to_numpy()),
+                rpdf["id"].to_numpy(dtype=np.int64),
+                np.vstack(rpdf["codes"].to_numpy()).astype(np.uint8),
+            )
+            qids = lpdf["query_id"].to_numpy(dtype=np.int64)
+            return np.repeat(qids, top_i.shape[1]), top_i.ravel(), top_s.ravel()
+
+        pairs = _grid_scan(
+            qframe, coded, grid_block, rerank, n_q, index_bytes, cap
         )
-        ids = np.asarray(encoded[id_col].to_numpy(), dtype=np.int64)
+    else:
+        encoded = coded.toPandas()
+        ids = encoded["id"].to_numpy(dtype=np.int64)
         codes = (
             np.vstack(encoded["codes"].to_numpy()).astype(np.uint8)
             if len(encoded)
@@ -1213,28 +904,9 @@ def pq_topk(
         # are unique, so the layout is identical and the job drops its
         # global sort exchange (guide §2.4).
         order = np.argsort(ids, kind="stable")
-        ids, codes = ids[order], codes[order]
-
-        cand = _adc_candidates_udf(emb.sparkSession, books, ids, codes, rerank)
-        # widen a narrow scan ahead of the CPU-heavy ADC stage
-        # (no-op at real scale)
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
+        pairs = _broadcast_scan(
+            qframe,
+            (ids[order], codes[order]),
+            lambda payload, x: adc_top(x, *payload)[0],
         )
-
-        pairs = (
-            fan_out_small_scan(qv).select(
-                F.col(id_col).alias("query_id"), cand(F.col("uv")).alias("cs")
-            )
-            .select("query_id", F.explode("cs").alias("neighbor_id"))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    scored = _score_pairs(emb, id_col, vec_col, pairs, n=n, unit=unit)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return _rank_topk(_score_pairs(emb, id_col, vec_col, pairs, n=n, unit=unit), k)

@@ -17,6 +17,18 @@ aggregate vector math in DOUBLE with left-to-right accumulation —
 bit-stable across engines (see ``functions/vectors.py``). The approx
 paths trade that portability for throughput; they are verified by
 recall, not hash equality.
+
+Every ANN candidate scan (LSH here, IVF in ``ivf.py``, PQ and IVF-PQ
+in ``pq.py``, the standing index in ``ann_index.py``) runs through
+one of two runners defined below; each operator supplies only its
+numpy block scorer:
+
+  - ``_broadcast_scan``: the index ships once as a content-keyed
+    broadcast (``_cached_broadcast``) and one Arrow UDF scores each
+    query batch against it.
+  - ``_grid_scan``: past the broadcast byte cap the index stays a
+    DataFrame; query blocks × corpus shards meet in one cogrouped
+    ``applyInPandas`` and a query-keyed window merges the shards.
 """
 
 from __future__ import annotations
@@ -29,30 +41,35 @@ from udacity_capstone_data_engineering_spark.functions.vectors import cosine_sim
 # Live kernel broadcasts, content-keyed (ADVICE r7: each anchor query
 # used to leave an up-to-256MiB broadcast pinned on the executors for
 # the life of the session; a 201-query catalog run accretes them).
-# Reuse within a session for identical corpora; evicted entries are
-# unpersist(blocking=False)-ed — safe even if a stale plan still
-# references one, since Spark re-ships an unpersisted broadcast from
-# the driver on next use.
 _KERNEL_BC: "dict[tuple, object]" = {}
 _KERNEL_BC_MAX = 3
 
 
-def _cached_broadcast(spark, key, build):
-    """Content-keyed LRU of live TorrentBroadcasts (shared by every
-    Arrow scan kernel — exact-cosine, LSH bucket index, IVF inverted
-    file, PQ code table). Shipping the index through an explicit
-    broadcast instead of UDF-closure capture matters twice over (r9):
-    a closure is re-serialized to the python worker PER TASK — the 4×
-    finer kernel partitions of the straggler fix turned that into
-    ~128 × 200 MB of deserialization at sf10 (measured DOUBLING the
-    sf1 lsh_self wall) — while a broadcast value is fetched once per
-    worker process and cached. Evicted entries are
-    unpersist(blocking=False)-ed — safe even if a stale plan still
-    references one, since Spark re-ships an unpersisted broadcast
-    from the driver on next use."""
+def _cached_broadcast(spark, payload):
+    """Content-keyed LRU of live TorrentBroadcasts, shared by every
+    Arrow scan kernel. The key is a digest of the whole pickled
+    payload — every array's dtype, shape and bytes — so no caller
+    writes a key by hand and a payload that differs in any array can
+    never be served a stale entry (ADVICE r9). Equal payloads reuse
+    one broadcast within a session.
+
+    Shipping the index through an explicit broadcast instead of
+    UDF-closure capture matters (r9): a closure is re-serialized to
+    the python worker PER TASK (measured DOUBLING the sf1 lsh_self
+    wall), while a broadcast value is fetched once per worker process
+    and cached. Evicted entries are unpersist(blocking=False)-ed —
+    safe even if a stale plan still references one, since Spark
+    re-ships an unpersisted broadcast from the driver on next use."""
+    import hashlib
+    import pickle
+    from types import SimpleNamespace
+
+    h = hashlib.sha1()
+    pickle.Pickler(SimpleNamespace(write=h.update), protocol=5).dump(payload)
+    key = (id(spark.sparkContext), h.hexdigest())
     bc = _KERNEL_BC.get(key)
     if bc is None:
-        bc = spark.sparkContext.broadcast(build())
+        bc = spark.sparkContext.broadcast(payload)
         _KERNEL_BC[key] = bc
         while len(_KERNEL_BC) > _KERNEL_BC_MAX:
             old = _KERNEL_BC.pop(next(iter(_KERNEL_BC)))
@@ -63,17 +80,157 @@ def _cached_broadcast(spark, key, build):
     return bc
 
 
-def _kernel_broadcast(spark, index: dict, mat, sumsq):
-    import hashlib
-
-    key = (
-        "cosine",
-        id(spark.sparkContext),
-        mat.shape,
-        hashlib.sha1(mat.tobytes()).hexdigest(),
-        hashlib.sha1(repr(sorted(index)).encode()).hexdigest(),
+def _rank_topk(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """The one top-k rule of every similarity operator: per query, rank
+    by ``score`` descending (NULLs last), ties to the lower
+    neighbor_id, keep ``rnk <= k``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id")
     )
-    return _cached_broadcast(spark, key, lambda: (index, mat, sumsq))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", score, "rnk")
+    )
+
+
+def _broadcast_scan(
+    queries: DataFrame, payload, score_block, min_partitions: int | None = None
+) -> DataFrame:
+    """Candidate pairs from an index small enough to broadcast.
+
+    ``queries`` is ``(query_id, qv array<double>)``; ``payload`` ships
+    once via ``_cached_broadcast``; ``score_block(payload, x)`` maps a
+    (batch × dim) query matrix to one id array per row (its candidates).
+    The query scan is widened first (``fan_out_small_scan``), so the
+    CPU-heavy scorer runs at cluster parallelism. Returns
+    ``(query_id, neighbor_id)`` with self pairs dropped."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
+        fan_out_small_scan,
+    )
+
+    bc = _cached_broadcast(queries.sparkSession, payload)
+
+    def scan(v):
+        return pd.Series(list(score_block(bc.value, np.vstack(v.to_numpy()))))
+
+    # .asNondeterministic() is an OPTIMIZER FENCE, not a semantics
+    # change (every scorer is deterministic): without it,
+    # InferFiltersFromGenerate infers `size(result) > 0` from the
+    # downstream explode and pushes that filter — WITH the whole Arrow
+    # UDF inside it — below the fan-out exchange, re-evaluating the
+    # ENTIRE scan a second time on the raw one-full-split layout, on
+    # one core (r9 diagnosis of the sf10 "straggler tail").
+    # Nondeterministic expressions cannot be duplicated or moved, so
+    # the kernel runs once, above the exchange, at the fan-out's
+    # parallelism.
+    udf = pandas_udf(scan, "array<long>").asNondeterministic()
+    return (
+        fan_out_small_scan(queries, min_partitions=min_partitions)
+        .select("query_id", udf(F.col("qv")).alias("cs"))
+        .select("query_id", F.explode("cs").alias("neighbor_id"))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+    )
+
+
+def _shard_count(total_bytes: int, cap: int, par: int, n_blocks: int) -> int:
+    """Shards for a grid scan: enough that each fits ``cap``, at least
+    2, and — since the grid's task count is shards × query blocks —
+    enough for ~2 tasks per core (at most 4 per core) when there are
+    few query blocks. Shards may be finer than the cap requires:
+    per-(query, row) scores are shard-independent and shards partition
+    the corpus."""
+    return max(
+        2,
+        -(-total_bytes // max(cap, 1)),
+        min(-(-2 * par // n_blocks), 4 * par),
+    )
+
+
+def _grid_scan(
+    queries: DataFrame,
+    corpus: DataFrame,
+    score_block,
+    take: int,
+    n_q: int,
+    corpus_bytes: int,
+    cap: int,
+    assign=None,
+) -> DataFrame:
+    """Candidate pairs from an index past the broadcast cap.
+
+    Queries (``(query_id, qv)``) are hash-blocked into
+    ``ADC_QUERY_BLOCK_ROWS`` blocks, the corpus (``id`` plus the
+    scorer's columns) is split into ``_shard_count`` shards, and one
+    cogrouped ``applyInPandas`` runs ``score_block(lpdf, rpdf)`` per
+    (query block × shard) cell; it returns ``(query ids, neighbor ids,
+    scores)`` arrays, NULL scores allowed. A query-keyed window
+    (``_rank_topk``) merges the shards to each query's top-``take`` by
+    (score desc, id asc). Nothing corpus-sized is broadcast; the
+    shuffled volume is corpus × blocks + queries × shards rows.
+
+    Shards are ``xxhash64(id) mod n_shards`` and every query visits
+    every shard, unless ``assign(n_shards)`` returns its own
+    ``(corpus with __shard, probes (query_id, __shard))``. Returns
+    ``(query_id, neighbor_id, score)`` with self pairs dropped."""
+    import numpy as np
+    import pandas as pd
+
+    from udacity_capstone_data_engineering_spark.operators.pq import (
+        ADC_QUERY_BLOCK_ROWS,
+    )
+
+    spark = queries.sparkSession
+    n_blocks = max(1, -(-n_q // ADC_QUERY_BLOCK_ROWS))
+    par = max(1, spark.sparkContext.defaultParallelism)
+    n_shards = _shard_count(corpus_bytes, cap, par, n_blocks)
+    if assign is None:
+        corpus = corpus.withColumn(
+            "__shard", F.pmod(F.xxhash64("id"), F.lit(n_shards)).cast("int")
+        )
+        left = queries.crossJoin(
+            F.broadcast(
+                spark.range(n_shards).select(
+                    F.col("id").cast("int").alias("__shard")
+                )
+            )
+        )
+    else:
+        corpus, probes = assign(n_shards)
+        left = probes.join(queries, "query_id")
+    left = left.withColumn(
+        "__qb", F.pmod(F.xxhash64("query_id"), F.lit(n_blocks)).cast("int")
+    )
+    right = corpus.crossJoin(
+        F.broadcast(
+            spark.range(n_blocks).select(F.col("id").cast("int").alias("__qb"))
+        )
+    )
+
+    def scan(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if len(lpdf) and len(rpdf):
+            qids, nids, scores = score_block(lpdf, rpdf)
+        else:
+            qids = nids = np.zeros(0, dtype=np.int64)
+            scores = np.zeros(0, dtype=np.float64)
+        return pd.DataFrame(
+            {"query_id": qids, "neighbor_id": nids, "score": scores}
+        )
+
+    cand = (
+        left.groupBy("__shard", "__qb")
+        .cogroup(right.groupBy("__shard", "__qb"))
+        .applyInPandas(scan, "query_id long, neighbor_id long, score double")
+    )
+    return (
+        _rank_topk(cand, take, "score")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", "score")
+    )
 
 
 def _exact_cosine_kernel_pairs(
@@ -116,7 +273,7 @@ def _exact_cosine_kernel_pairs(
     for i in range(dim):  # left-to-right, matching the JVM fold
         sumsq = sumsq + mat[:, i] * mat[:, i]
     index = {int(v): p for p, v in enumerate(ids)}
-    bc = _kernel_broadcast(spark, index, mat, sumsq)
+    bc = _cached_broadcast(spark, (index, mat, sumsq))
 
     def score(qs, cs):
         idx, m, sq = bc.value
@@ -318,18 +475,66 @@ def _topk_margin_candidates(
     caller falls back to the n² pair plan whose NULL-cosine semantics
     the degenerate rows need."""
     import numpy as np
-    import pandas as pd
 
-    spark = emb.sparkSession
+    got = _strict_kernel_matrix(emb, id_col, vec_col)
+    if got is None or len(got[0]) <= k:
+        # ineligible, or fewer than k neighbors: NULL-padding is the
+        # n² plan's
+        return None
+
+    def keep(scores, qb, qi, inv):
+        nn = scores.shape[1]
+        scores[np.arange(len(qb)), qi] = -np.inf  # exclude self
+        kth = np.partition(scores, nn - k, axis=1)[:, nn - k]
+        return scores >= (kth - _TOPK_ROUND_MARGIN)[:, None]
+
+    return _exact_block_pairs(emb, id_col, got, keep)
+
+
+def _threshold_pairs_kernel(
+    emb: DataFrame, id_col: str, vec_col: str, threshold: float
+) -> DataFrame | None:
+    """Ordered self-pairs (id_a < id_b) with RAW cosine >= threshold,
+    computed inside one Arrow scan against the broadcast matrix — the
+    exact-tier near-dup shape (``embedding_dup_pairs``). The n² plan
+    filters on the UNROUNDED kernel double, and this kernel reproduces
+    that double bit-for-bit (same left-to-right accumulation, same
+    sqrt/divide), so emitting only passing pairs is exactly the
+    filter — no margin lemma needed. Pairs with a degenerate side
+    score NULL in the n² plan and NULL fails the >= filter, so those
+    rows were never emitted there either; still, degenerate corpora
+    fall back (None) so both plans stay row-identical everywhere.
+    Returns (query_id, neighbor_id, cosine_raw) or None if ineligible."""
     got = _strict_kernel_matrix(emb, id_col, vec_col)
     if got is None:
         return None
+    return _exact_block_pairs(
+        emb,
+        id_col,
+        got,
+        lambda scores, qb, qi, inv: (scores >= threshold)
+        & (qb[:, None] < inv[None, :]),  # ordered pairs only
+    )
+
+
+def _exact_block_pairs(emb: DataFrame, id_col: str, got, keep) -> DataFrame:
+    """One Arrow scan shared by the strict self-pair kernels: each
+    block of query rows scores against the WHOLE broadcast matrix with
+    the pair kernel's left-to-right dim accumulation and sqrt/divide
+    (bit-identical doubles to ``_exact_cosine_kernel_pairs``), and
+    ``keep(scores, qb, qi, inv)`` picks the pairs to emit — ``qb`` the
+    block's query ids, ``qi`` their matrix rows, ``inv`` row → id.
+    Returns (query_id, neighbor_id, cosine_raw)."""
+    import numpy as np
+    import pandas as pd
+
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
+        fan_out_small_scan,
+    )
+
     ids, mat, sumsq = got
-    n = len(ids)
-    if n <= k:  # fewer than k neighbors: NULL-padding is the n² plan's
-        return None
     index = {int(v): p for p, v in enumerate(ids)}
-    bc = _kernel_broadcast(spark, index, mat, sumsq)
+    bc = _cached_broadcast(emb.sparkSession, (index, mat, sumsq))
 
     def gen(batches):
         idx, m, sq = bc.value
@@ -349,84 +554,10 @@ def _topk_margin_candidates(
                 )
                 qm = m[qi]
                 acc = np.zeros((len(qb), nn))
-                for i in range(d):  # left-to-right per pair, as the
-                    # pair kernel's fold — bit-identical accumulation
-                    acc = acc + qm[:, i][:, None] * m[:, i][None, :]
-                denom = roots[qi][:, None] * roots[None, :]
-                scores = acc / denom
-                scores[np.arange(len(qb)), qi] = -np.inf  # exclude self
-                kth = np.partition(scores, nn - k, axis=1)[:, nn - k]
-                keep = scores >= (kth - _TOPK_ROUND_MARGIN)[:, None]
-                rows, cols = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "query_id": qb[rows],
-                        "neighbor_id": inv[cols],
-                        "cosine_raw": scores[rows, cols],
-                    }
-                )
-
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        fan_out_small_scan,
-    )
-
-    qsrc = fan_out_small_scan(
-        emb.select(F.col(id_col).alias("query_id"))
-    )
-    return qsrc.mapInPandas(
-        gen, schema="query_id long, neighbor_id long, cosine_raw double"
-    )
-
-
-def _threshold_pairs_kernel(
-    emb: DataFrame, id_col: str, vec_col: str, threshold: float
-) -> DataFrame | None:
-    """Ordered self-pairs (id_a < id_b) with RAW cosine >= threshold,
-    computed inside one Arrow scan against the broadcast matrix — the
-    exact-tier near-dup shape (``embedding_dup_pairs``). The n² plan
-    filters on the UNROUNDED kernel double, and this kernel reproduces
-    that double bit-for-bit (same left-to-right accumulation, same
-    sqrt/divide), so emitting only passing pairs is exactly the
-    filter — no margin lemma needed. Pairs with a degenerate side
-    score NULL in the n² plan and NULL fails the >= filter, so those
-    rows were never emitted there either; still, degenerate corpora
-    fall back (None) so both plans stay row-identical everywhere.
-    Returns (query_id, neighbor_id, cosine_raw) or None if ineligible."""
-    import numpy as np
-    import pandas as pd
-
-    spark = emb.sparkSession
-    got = _strict_kernel_matrix(emb, id_col, vec_col)
-    if got is None:
-        return None
-    ids, mat, sumsq = got
-    index = {int(v): p for p, v in enumerate(ids)}
-    bc = _kernel_broadcast(spark, index, mat, sumsq)
-
-    def gen(batches):
-        idx, m, sq = bc.value
-        nn, d = m.shape
-        inv = np.empty(nn, dtype=np.int64)
-        for vid, pos in idx.items():
-            inv[pos] = vid
-        roots = np.sqrt(sq)
-        block = max(8, (8 << 20) // max(nn, 1))
-        for pdf_in in batches:
-            qids = pdf_in["query_id"].to_numpy(dtype=np.int64)
-            for s in range(0, len(qids), block):
-                qb = qids[s : s + block]
-                qi = np.fromiter(
-                    (idx[int(v)] for v in qb), dtype=np.int64, count=len(qb)
-                )
-                qm = m[qi]
-                acc = np.zeros((len(qb), nn))
                 for i in range(d):  # left-to-right per pair
                     acc = acc + qm[:, i][:, None] * m[:, i][None, :]
                 scores = acc / (roots[qi][:, None] * roots[None, :])
-                keep = (scores >= threshold) & (
-                    qb[:, None] < inv[None, :]  # ordered pairs only
-                )
-                rows, cols = np.nonzero(keep)
+                rows, cols = np.nonzero(keep(scores, qb, qi, inv))
                 yield pd.DataFrame(
                     {
                         "query_id": qb[rows],
@@ -434,10 +565,6 @@ def _threshold_pairs_kernel(
                         "cosine_raw": scores[rows, cols],
                     }
                 )
-
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        fan_out_small_scan,
-    )
 
     qsrc = fan_out_small_scan(emb.select(F.col(id_col).alias("query_id")))
     return qsrc.mapInPandas(
@@ -453,28 +580,18 @@ def brute_force_topk(
     queries: DataFrame | None = None,
 ) -> DataFrame:
     """Exact top-k nearest neighbors by cosine (ties → lower id first)."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
     if queries is None:
         fast = _topk_margin_candidates(emb, id_col, vec_col, k)
         if fast is not None:
-            return (
+            return _rank_topk(
                 fast.select(
                     "query_id",
                     "neighbor_id",
                     F.round("cosine_raw", 6).alias("cosine"),
-                )
-                .withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= k)
-                .select("query_id", "neighbor_id", "cosine", "rnk")
+                ),
+                k,
             )
-    scored = _pairwise_cosine(emb, id_col, vec_col, queries)
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return _rank_topk(_pairwise_cosine(emb, id_col, vec_col, queries), k)
 
 
 JL_SCALE = 1024  # same quantization grid as embedding_random_projection
@@ -645,14 +762,7 @@ def _exact_rerank_pairs(
     in the ORIGINAL vector space — brute_force_topk's scoring and tie
     rule, restricted to the candidate set."""
     scored = _score_pairs(emb, id_col, vec_col, cand.select("query_id", "neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return _rank_topk(scored, k)
 
 
 def _hyperplane(dim: int, table: int, plane: int) -> list[float]:
@@ -786,12 +896,8 @@ def lsh_bucket_keys(
         x = np.vstack(v.to_numpy())  # (batch, dim)
         return pd.Series(list(keyfn(x)))
 
-    # optimizer fence (r9): the downstream posexplode makes
-    # InferFiltersFromGenerate infer `size(__keys) > 0` and push it —
-    # with the whole bucketing UDF inside — below any upstream
-    # exchange, re-running the full keying a second time on the raw
-    # scan layout (see _lsh_scan_candidates_udf for the measured
-    # diagnosis). asNondeterministic pins one evaluation, in place.
+    # optimizer fence: see _broadcast_scan (the downstream posexplode
+    # would otherwise re-run the whole keying below any exchange)
     udf = pandas_udf(buckets, "array<long>").asNondeterministic()
     keyed = emb.select("*", udf(F.col(vec_col).cast("array<double>")).alias("__keys"))
     stride = n_probes + 1
@@ -842,153 +948,123 @@ def _unit_vectors(emb, id_col: str, vec_col: str):
     every number) so NaN/±inf elements propagate NaN into uv — the
     output is built with explicit pyarrow buffers because the pandas
     return path would silently rewrite those NaN elements to nulls."""
-    import numpy as np
-    import pyarrow as pa
-
-    def normalize(batches):
-        for rb in batches:
-            ids = rb.column(0)
-            vecs = rb.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            n_rows = len(vecs)
-            out_vals: list = [None] * n_rows
-            live: list = []
-            offs = vecs.offsets.to_numpy(zero_copy_only=False)
-            lens = np.diff(offs)
-            if (
-                vecs.null_count == 0
-                and vecs.values.null_count == 0
-                and n_rows > 0
-                and lens.min(initial=1) == lens.max(initial=1) != 0
-            ):
-                # Fixed-dim, no-null batch (the real corpus shape):
-                # one zero-copy reshape, no per-cell accessor churn.
-                flat_in = vecs.values.to_numpy(zero_copy_only=False)
-                live = [
-                    (p, row)
-                    for p, row in enumerate(
-                        np.asarray(flat_in, dtype=np.float64).reshape(
-                            n_rows, int(lens[0])
-                        )
-                    )
-                ]
-            else:
-                for p in range(n_rows):
-                    cell = vecs[p]
-                    if not cell.is_valid:
-                        continue
-                    a = cell.values.to_numpy(zero_copy_only=False)
-                    if cell.values.null_count or a.shape[0] == 0:
-                        # NULL element → NULL fold → NULL uv; empty →
-                        # norm 0 → NULL uv, as the expression path
-                        continue
-                    live.append((p, np.asarray(a, dtype=np.float64)))
-            by_len: dict[int, list] = {}
-            for p, a in live:
-                by_len.setdefault(a.shape[0], []).append((p, a))
-            for d, rows in by_len.items():
-                x = np.vstack([a for _, a in rows])
-                acc = np.zeros(len(rows))
-                for i in range(d):  # left-to-right, matching the JVM fold
-                    acc = acc + x[:, i] * x[:, i]
-                n = np.sqrt(acc)
-                # when(__n > 0): Spark compares NaN greater than any
-                # number, so NaN norms PASS and propagate NaN elements.
-                ok = (n > 0) | np.isnan(n)
-                u = x / np.where(ok, n, 1.0)[:, None]
-                for r in np.nonzero(ok)[0]:
-                    out_vals[rows[int(r)][0]] = u[int(r)]
-            # Explicit ListArray build: values buffer keeps true NaNs
-            # (pandas' from_pandas path would null them out).
-            offsets = np.zeros(n_rows + 1, dtype=np.int32)
-            for p in range(n_rows):
-                offsets[p + 1] = offsets[p] + (
-                    len(out_vals[p]) if out_vals[p] is not None else 0
-                )
-            flat = (
-                np.concatenate([v for v in out_vals if v is not None])
-                if offsets[-1]
-                else np.zeros(0, dtype=np.float64)
-            )
-            mask = pa.array([v is None for v in out_vals], type=pa.bool_())
-            uv = pa.ListArray.from_arrays(
-                pa.array(offsets), pa.array(flat, type=pa.float64()),
-                mask=mask,
-            )
-            yield pa.RecordBatch.from_arrays([ids, uv], ["__id", "uv"])
-
     id_type = emb.schema[id_col].dataType.simpleString()
     return (
         emb.select(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
         )
-        .mapInArrow(normalize, f"__id {id_type}, uv array<double>")
+        .mapInArrow(_unit_vector_batches, f"__id {id_type}, uv array<double>")
         .select(F.col("__id").alias(id_col), "uv")
     )
 
 
-def _collect_unit_matrix(emb, id_col: str, vec_col: str, dim: int):
-    """Collect (ids, L2-normalized matrix) to the driver iff the corpus
-    fits ``BROADCAST_SCORE_MAX_BYTES``; returns ``(ids, mat)`` or None.
+def _unit_vector_batches(batches):
+    """The ``_unit_vectors`` Arrow kernel: RecordBatches of (id, vector)
+    → (__id, uv). Offsets are honoured, so sliced batches are safe."""
+    import numpy as np
+    import pyarrow as pa
+
+    for rb in batches:
+        ids = rb.column(0)
+        vecs = rb.column(1)
+        if isinstance(vecs, pa.ChunkedArray):
+            vecs = vecs.combine_chunks()
+        n_rows = len(vecs)
+        out_vals: list = [None] * n_rows
+        live: list = []
+        offs = vecs.offsets.to_numpy(zero_copy_only=False)
+        lens = np.diff(offs)
+        # flatten(), not .values: it honours a sliced batch's offset
+        flat_vals = vecs.flatten()
+        if (
+            vecs.null_count == 0
+            and flat_vals.null_count == 0
+            and n_rows > 0
+            and lens.min() == lens.max() != 0
+        ):
+            # Fixed-dim, no-null batch (the real corpus shape):
+            # one zero-copy reshape, no per-cell accessor churn.
+            flat_in = flat_vals.to_numpy(zero_copy_only=False)
+            live = [
+                (p, row)
+                for p, row in enumerate(
+                    np.asarray(flat_in, dtype=np.float64).reshape(
+                        n_rows, int(lens[0])
+                    )
+                )
+            ]
+        else:
+            for p in range(n_rows):
+                cell = vecs[p]
+                if not cell.is_valid:
+                    continue
+                a = cell.values.to_numpy(zero_copy_only=False)
+                if cell.values.null_count or a.shape[0] == 0:
+                    # NULL element → NULL fold → NULL uv; empty →
+                    # norm 0 → NULL uv, as the expression path
+                    continue
+                live.append((p, np.asarray(a, dtype=np.float64)))
+        by_len: dict[int, list] = {}
+        for p, a in live:
+            by_len.setdefault(a.shape[0], []).append((p, a))
+        for d, rows in by_len.items():
+            x = np.vstack([a for _, a in rows])
+            acc = np.zeros(len(rows))
+            for i in range(d):  # left-to-right, matching the JVM fold
+                acc = acc + x[:, i] * x[:, i]
+            n = np.sqrt(acc)
+            # when(__n > 0): Spark compares NaN greater than any
+            # number, so NaN norms PASS and propagate NaN elements.
+            ok = (n > 0) | np.isnan(n)
+            u = x / np.where(ok, n, 1.0)[:, None]
+            for r in np.nonzero(ok)[0]:
+                out_vals[rows[int(r)][0]] = u[int(r)]
+        # Explicit ListArray build: values buffer keeps true NaNs
+        # (pandas' from_pandas path would null them out).
+        offsets = np.zeros(n_rows + 1, dtype=np.int32)
+        for p in range(n_rows):
+            offsets[p + 1] = offsets[p] + (
+                len(out_vals[p]) if out_vals[p] is not None else 0
+            )
+        flat = (
+            np.concatenate([v for v in out_vals if v is not None])
+            if offsets[-1]
+            else np.zeros(0, dtype=np.float64)
+        )
+        mask = pa.array([v is None for v in out_vals], type=pa.bool_())
+        uv = pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(flat, type=pa.float64()),
+            mask=mask,
+        )
+        yield pa.RecordBatch.from_arrays([ids, uv], ["__id", "uv"])
+
+
+def _unit_rows(raw):
+    """(unit, norms) of a raw row matrix: elementwise x / ||x||, with
+    zero-norm rows left all-zero. Every collector and scan kernel
+    normalizes through here, so identical rows give bit-identical
+    unit vectors in every regime."""
+    import numpy as np
+
+    norms = np.linalg.norm(raw, axis=1, keepdims=True)
+    unit = raw / np.where(norms == 0, 1.0, norms)
+    unit[norms[:, 0] == 0] = 0.0
+    return unit, norms[:, 0]
+
+
+def _collect_matrix(emb, id_col: str, vec_col: str, dim: int):
+    """Collect the corpus to the driver iff it fits
+    ``BROADCAST_SCORE_MAX_BYTES``: ``(ids, raw, unit, live)`` sorted by
+    id, or None past the cap. ``unit`` comes from ``_unit_rows``;
+    ``live`` marks rows with a direction (norm > 0) — ``_score_pairs``
+    scores only those, while the LSH kernel keys every non-NULL row
+    from its RAW vector, exactly the bytes the bucketing UDF sees.
 
     One Arrow job replaces three (count + dim-probe + full collect):
     the byte cap is enforced with a LIMIT of cap/(8·dim)+1 rows — if
     the limited collect comes back full, the corpus is over the cap
-    and the caller takes the join path (and pays a real count). At
-    100 TB the limit stops the scan after the first partitions; the
-    driver never sees more than the cap + one row. The RAW vectors are
-    collected and normalized in one numpy pass — measured faster than
-    evaluating the per-element ``transform`` normalization JVM-side
-    just to re-collect the result. Zero-norm rows are dropped (they
-    have no direction; scoring surfaces them as NULL cosine).
-    """
-    import numpy as np
-
-    max_rows = BROADCAST_SCORE_MAX_BYTES // (8 * max(dim, 1))
-    pdf = (
-        emb.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-        .filter(F.col(vec_col).isNotNull())
-        .limit(max_rows + 1)
-        .toPandas()
-    )
-    if len(pdf) > max_rows:
-        return None
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    mat = (
-        np.vstack(pdf.iloc[:, 1].to_numpy()).astype(np.float64)
-        if len(pdf)
-        else np.zeros((0, dim), dtype=np.float64)
-    )
-    norms = np.linalg.norm(mat, axis=1)
-    keep = norms > 0
-    mat = mat[keep] / norms[keep][:, None]
-    return ids[keep], mat
-
-
-# Above this many BUILD-SIDE BYTES (n_vectors × tables × ~24 b/row of
-# id+table+bucket ints), stop broadcasting the exact-key side of the
-# LSH candidate join and let it shuffle. Same philosophy as
-# BROADCAST_SCORE_MAX_BYTES: measured bytes, not row counts.
-BROADCAST_BUILD_MAX_BYTES = 64 * 1024 * 1024
-
-# Estimated candidate MULTISET rows (n_queries × tables × (probes+1) ×
-# mean bucket size) above which lsh_topk's in-UDF scan kernel beats the
-# candidate join: the join materializes the multiset through a
-# distinct shuffle, the kernel never leaves the Python worker.
-# Measured crossover: join 3.7 s at ~12M rows (2k vectors) vs kernel
-# 352 s → ~35 s at ~380M rows (20k). Same discipline as
-# ivf._PAIR_JOIN_MAX_PAIRS.
-LSH_JOIN_MAX_CANDIDATES = 32_000_000
-
-
-def _collect_raw_matrix(emb, id_col, vec_col, dim):
-    """Like :func:`_collect_unit_matrix` but returns
-    ``(ids, raw, unit)`` sorted by id, KEEPING zero-norm rows (their
-    unit row is zeroed): the scan kernel must compute bucket keys from
-    the RAW vectors — exactly the bytes the bucketing UDF sees — and
-    zero-norm rows are bucket members in the join path too.  ``None``
-    past the byte cap."""
+    and the caller takes the distributed path (and pays a real count).
+    The driver never sees more than the cap + one row."""
     import numpy as np
 
     max_rows = BROADCAST_SCORE_MAX_BYTES // (8 * max(dim, 1))
@@ -1008,18 +1084,31 @@ def _collect_raw_matrix(emb, id_col, vec_col, dim):
     )
     order = np.argsort(ids, kind="stable")
     ids, raw = ids[order], raw[order]
-    norms = np.linalg.norm(raw, axis=1, keepdims=True)
-    safe = np.where(norms == 0, 1.0, norms)
-    unit = raw / safe
-    unit[norms[:, 0] == 0] = 0.0
-    return ids, raw, unit
+    unit, norms = _unit_rows(raw)
+    return ids, raw, unit, norms > 0
+
+
+# Above this many BUILD-SIDE BYTES (n_vectors × tables × ~24 b/row of
+# id+table+bucket ints), stop broadcasting the exact-key side of the
+# LSH candidate join and let it shuffle. Same philosophy as
+# BROADCAST_SCORE_MAX_BYTES: measured bytes, not row counts.
+BROADCAST_BUILD_MAX_BYTES = 64 * 1024 * 1024
+
+# Estimated candidate MULTISET rows (n_queries × tables × (probes+1) ×
+# mean bucket size) above which lsh_topk's in-UDF scan kernel beats the
+# candidate join: the join materializes the multiset through a
+# distinct shuffle, the kernel never leaves the Python worker.
+# Measured crossover: join 3.7 s at ~12M rows (2k vectors) vs kernel
+# 352 s → ~35 s at ~380M rows (20k). Same discipline as
+# ivf._PAIR_JOIN_MAX_PAIRS.
+LSH_JOIN_MAX_CANDIDATES = 32_000_000
 
 
 def _bucket_index(corpus_keys):
     """(table, exact key) → id-sorted positions dict from a corpus key
     matrix (n × tables int64) — shared by the broadcast scan kernel and
-    the per-shard builds of the sharded grid kernel, so both regimes
-    gather identical bucket membership for identical key matrices."""
+    the per-shard builds of the grid kernel, so both regimes gather
+    identical bucket membership for identical key matrices."""
     import numpy as np
 
     n_tables = corpus_keys.shape[1] if corpus_keys.ndim == 2 else 1
@@ -1035,289 +1124,37 @@ def _bucket_index(corpus_keys):
     return index
 
 
-# Query rows per block in the sharded LSH grid join — bounds the
-# per-task pandas group (block × dim raw doubles); same figure as
-# pq.ADC_QUERY_BLOCK_ROWS (kept separate to avoid a similarity→pq
-# import cycle).
-LSH_QUERY_BLOCK_ROWS = 4096
-
-
-def _sharded_lsh_topk(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    k: int,
-    planes: int,
-    tables: int,
-    multiprobe: int,
-    queries: DataFrame | None,
-    n: int,
-    n_q: int,
-    cap: int,
-) -> DataFrame:
-    """LSH top-k PAST the broadcast byte cap (VERDICT r10 #1): the
-    cell-sharded grid pattern of ``pq._sharded_adc_candidates`` applied
-    to bucket indexes, replacing the bucket-JOIN regime whose
-    pair-scoring join shipped unit vectors through a
-    tables·probes·bucket² candidate multiset and was MEASURED spilling
-    >60 GB of shuffle to local-disk exhaustion at 2M vectors × 2k
-    queries (SCALING.md third-decade probe, r10).
-
-    Shape: the corpus is hash-sharded on id so each shard's raw matrix
-    fits ``cap`` bytes; queries are hash-blocked
-    (``LSH_QUERY_BLOCK_ROWS``); a cogrouped ``applyInPandas`` grid join
-    scans each (query-block × shard) cell — build the SHARD's bucket
-    index with the same ``_lsh_key_fn`` machinery as the broadcast
-    kernel (raw vectors in, byte-identical keys out), probe, gather,
-    score the gathered unit rows, emit the per-(query, shard)
-    top-``k+8`` with exact row-wise-einsum cosines — and a query-keyed
-    window merges shards to the final top-k. Because shards partition
-    every bucket, the union of per-shard top-(k+8) sets contains the
-    broadcast kernel's global top-(k+8), and the merge key
-    (cosine desc, id asc) is the kernel path's — the forced-tiny-cap
-    regime test pins row equality against it. Nothing corpus-sized is
-    ever broadcast or carried through a join: the shuffled volume is
-    corpus×n_blocks + queries×n_shards rows (the standard grid trade),
-    and candidates leave each task already cut to k+8 per query.
-
-    Zero-norm rows follow the kernel-path contract: as candidates they
-    score −inf in selection and NULL cosine in the output; a zero-norm
-    query gets NULL cosines throughout (ranked by id, NULLs last)."""
+def _lsh_top_positions(index, unit, zero_mask, x, probe_keys, take):
+    """The LSH block scorer of both scan regimes: per RAW query row of
+    ``x``, gather the bucket-mates its probe keys hit in ``index``
+    (``probe_keys``: (rows × tables × (probes+1)) from the SAME
+    ``_lsh_key_fn`` machinery as the bucketing UDF), deduplicate with
+    one sort, and keep the top-``take`` positions by exact cosine
+    against the id-sorted ``unit`` rows (score desc, position asc;
+    ``zero_mask`` rows score −inf, i.e. ranked last like the join
+    path's NULL cosine). Returns ``(xq, qzero, tops)``: the unit
+    queries, the zero-norm query mask, and one position array per
+    query."""
     import numpy as np
-    import pandas as pd
 
-    spark = emb.sparkSession
-    take = k + 8
-    corpus_keyfn, _ = _lsh_key_fn(dim, planes, tables, 0)
-    probe_keyfn, n_probes = _lsh_key_fn(dim, planes, tables, multiprobe)
-    n_blocks = max(1, -(-n_q // LSH_QUERY_BLOCK_ROWS))
-    # the grid's task count is n_shards × n_blocks: a serving batch
-    # (one query block) against a 4-shard corpus would otherwise run
-    # on 4 of the cluster's cores. Shards may be FINER than the byte
-    # cap requires — per-(query,row) work is shard-independent, total
-    # bucket work is partitioned not replicated — so size the shard
-    # count up to ~2 tasks/core; only per-task corpus keying and the
-    # per-shard probe overhead grow, both sublinear in n_shards.
-    par = max(1, spark.sparkContext.defaultParallelism)
-    n_shards = max(
-        2,
-        -(-(n * dim * 8) // max(cap, 1)),
-        min(-(-2 * par // n_blocks), 4 * par),
-    )
-
-    qsrc = (queries if queries is not None else emb).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).filter(F.col("qv").isNotNull())
-    left = qsrc.crossJoin(
-        F.broadcast(
-            spark.range(n_shards).select(F.col("id").cast("int").alias("__shard"))
-        )
-    ).withColumn(
-        "__qb", F.pmod(F.xxhash64("query_id"), F.lit(n_blocks)).cast("int")
-    )
-    right = (
-        emb.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .filter(F.col("v").isNotNull())
-        .withColumn(
-            "__shard", F.pmod(F.xxhash64("id"), F.lit(n_shards)).cast("int")
-        )
-        .crossJoin(
-            F.broadcast(
-                spark.range(n_blocks).select(
-                    F.col("id").cast("int").alias("__qb")
-                )
-            )
-        )
-    )
-
-    def scan(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame(
-                {
-                    "query_id": pd.array([], dtype="int64"),
-                    "neighbor_id": pd.array([], dtype="int64"),
-                    "cosine": pd.array([], dtype="Float64"),
-                }
-            )
-        rpdf = rpdf.sort_values("id")
-        ids = rpdf["id"].to_numpy(dtype=np.int64)
-        raw = np.vstack(rpdf["v"].to_numpy()).astype(np.float64)
-        # the same normalization arithmetic as _collect_unit_matrix /
-        # _collect_raw_matrix: elementwise x / ||x||, zero-norm rows
-        # zeroed — identical operand values give bit-identical units
-        norms = np.linalg.norm(raw, axis=1, keepdims=True)
-        safe = np.where(norms == 0, 1.0, norms)
-        unit = raw / safe
-        zero_mask = norms[:, 0] == 0
-        unit[zero_mask] = 0.0
-        index = _bucket_index(corpus_keyfn(raw))
-        x = np.vstack(lpdf["qv"].to_numpy()).astype(np.float64)
-        qids = lpdf["query_id"].to_numpy(dtype=np.int64)
-        qnorms = np.linalg.norm(x, axis=1, keepdims=True)
-        xq = x / np.where(qnorms == 0, 1.0, qnorms)
-        qzero = qnorms[:, 0] == 0
-        pk = probe_keyfn(x).reshape(len(x), tables, n_probes + 1)
-        out_q, out_i, out_c, out_na = [], [], [], []
-        for qi in range(len(x)):
-            parts = [
-                arr
-                for t in range(tables)
-                for r in range(n_probes + 1)
-                if (arr := index.get((t, int(pk[qi, t, r])))) is not None
-            ]
-            if not parts:
-                continue
-            pos = np.unique(np.concatenate(parts))
-            s = unit[pos] @ xq[qi]
-            s[zero_mask[pos]] = -np.inf
-            top = np.argsort(-s, kind="stable")[: min(take, len(pos))]
-            sel = pos[top]
-            # exact emitted score: ROW-WISE einsum over the unit rows —
-            # the same op/order as _score_pairs' broadcast kernel, so
-            # the forced-cap regime test compares bit-identical doubles
-            cos = np.einsum(
-                "ij,ij->i",
-                unit[sel],
-                np.broadcast_to(xq[qi], (len(sel), unit.shape[1])),
-            )
-            out_q.append(np.full(len(sel), qids[qi], dtype=np.int64))
-            out_i.append(ids[sel])
-            out_c.append(cos)
-            out_na.append(zero_mask[sel] | qzero[qi])
-        if not out_q:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.array([], dtype="int64"),
-                    "neighbor_id": pd.array([], dtype="int64"),
-                    "cosine": pd.array([], dtype="Float64"),
-                }
-            )
-        cvals = pd.array(np.concatenate(out_c), dtype="Float64")
-        na = np.concatenate(out_na)
-        if na.any():
-            cvals[na] = pd.NA
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_i),
-                "cosine": cvals,
-            }
-        )
-
-    cand = (
-        left.groupBy("__shard", "__qb")
-        .cogroup(right.groupBy("__shard", "__qb"))
-        .applyInPandas(scan, "query_id long, neighbor_id long, cosine double")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    scored = cand.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
-
-
-def _lsh_scan_candidates_udf(
-    spark, corpus_keyfn, probe_keyfn, n_probes, ids, raw, unit, take
-):
-    """pandas_udf: RAW query vector → its top-``take`` candidate ids
-    from the broadcast bucket index, scored exactly — the LSH analogue
-    of ``ivf._ivf_scan_candidates_udf`` (r5: the candidate JOIN
-    materialized a ~tables·probes·bucket² multiset through a distinct
-    shuffle, measured 352 s at 20k vectors; this kernel gathers and
-    scores inside the worker).
-
-    The index maps (table, exact key) → positions into the id-sorted
-    unit matrix; per query the probe keys come from the SAME
-    ``_lsh_key_fn`` machinery as the bucketing UDF (raw vectors in,
-    byte-identical key sequences out), gathered positions are
-    deduplicated with one sort, and the exact cosine top-``take`` is
-    emitted with (score desc, id asc) ties — zero-norm corpus rows
-    score −inf, matching the join path's NULL-cosine-ranked-last."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # build the (table, key) → positions index from the corpus keys
-    corpus_keys = corpus_keyfn(raw)  # (n, tables) — probes=0 machinery
-    n_tables = corpus_keys.shape[1] if corpus_keys.ndim == 2 else 1
-
-    def build():
-        index = _bucket_index(corpus_keys)
-        zero_mask = (unit == 0).all(axis=1)
-        return index, ids, unit, zero_mask
-
-    # index + matrices go to workers as ONE broadcast (fetched once
-    # per worker, not re-deserialized per task — see _cached_broadcast)
-    bc = _cached_broadcast(
-        spark,
-        (
-            "lsh_scan",
-            id(spark.sparkContext),
-            unit.shape,
-            n_tables,
-            n_probes,
-            hashlib.sha1(raw.tobytes()).hexdigest(),
-            # the bucket index is a function of the hash FAMILY, not just
-            # the corpus: same corpus + same table/probe counts with a
-            # different plane count (or seed) must not reuse a stale
-            # index keyed under the old family (ADVICE r9) — the corpus
-            # key matrix captures the family's effect on the payload
-            # exactly
-            hashlib.sha1(corpus_keys.tobytes()).hexdigest(),
-        ),
-        build,
-    )
-
-    def scan(v):
-        index, b_ids, b_unit, zero_mask = bc.value
-        x = np.vstack(v.to_numpy())
-        norms = np.linalg.norm(x, axis=1, keepdims=True)
-        xq = x / np.where(norms == 0, 1.0, norms)
-        pk = probe_keyfn(x).reshape(len(x), n_tables, n_probes + 1)
-        out = []
-        for qi in range(len(x)):
-            parts = [
-                arr
-                for t in range(n_tables)
-                for r in range(n_probes + 1)
-                if (arr := index.get((t, int(pk[qi, t, r])))) is not None
-            ]
-            if not parts:
-                out.append(np.zeros(0, dtype=np.int64))
-                continue
-            pos = np.unique(np.concatenate(parts))
-            s = b_unit[pos] @ xq[qi]
-            s[zero_mask[pos]] = -np.inf
-            top = np.argsort(-s, kind="stable")[: min(take, len(pos))]
-            out.append(b_ids[pos[top]].astype(np.int64))
-        return pd.Series(out)
-
-    # .asNondeterministic() is an OPTIMIZER FENCE, not a semantics
-    # change (the kernel is seeded/deterministic): without it,
-    # InferFiltersFromGenerate infers `size(result) > 0` from the
-    # downstream explode and pushes that filter — WITH the whole Arrow
-    # UDF inside it — below the fan-out exchange, re-evaluating the
-    # ENTIRE scan a second time on the raw one-full-split layout:
-    # one serial full-corpus scan on one core (r9 diagnosis; this
-    # duplicate evaluation, not density variance, was r8's measured
-    # sf10 "straggler tail"). Nondeterministic expressions cannot be
-    # duplicated or moved, so the kernel runs once, above the
-    # exchange, at the fan-out's parallelism.
-    return pandas_udf(scan, "array<long>").asNondeterministic()
+    xq, qnorms = _unit_rows(x)
+    tables, width = probe_keys.shape[1], probe_keys.shape[2]
+    tops = []
+    for qi in range(len(x)):
+        parts = [
+            arr
+            for t in range(tables)
+            for r in range(width)
+            if (arr := index.get((t, int(probe_keys[qi, t, r])))) is not None
+        ]
+        if not parts:
+            tops.append(np.zeros(0, dtype=np.int64))
+            continue
+        pos = np.unique(np.concatenate(parts))
+        s = unit[pos] @ xq[qi]
+        s[zero_mask[pos]] = -np.inf
+        tops.append(pos[np.argsort(-s, kind="stable")[: min(take, len(pos))]])
+    return xq, qnorms == 0, tops
 
 
 def _score_pairs(
@@ -1344,8 +1181,8 @@ def _score_pairs(
     :func:`_unit_vectors`, so callers that already normalized (IVF's
     probe stage) don't pay the normalization scan twice.
 
-    ``unit_mat``: optionally the ALREADY-COLLECTED ``(ids, mat)`` pair
-    (from :func:`_collect_unit_matrix`). Callers that collected it for
+    ``unit_mat``: optionally the ALREADY-COLLECTED corpus (the
+    :func:`_collect_matrix` tuple). Callers that collected it for
     their own sizing (LSH) pass it through, which skips the count +
     dim-probe + collect jobs entirely — on small inputs those fixed
     jobs, not the math, dominate wall time.
@@ -1370,10 +1207,11 @@ def _score_pairs(
         head = emb.select(F.size(F.col(vec_col)).alias("d")).head()
         dim = int(head["d"]) if head is not None else 0
         if n * dim * 8 <= BROADCAST_SCORE_MAX_BYTES:
-            unit_mat = _collect_unit_matrix(emb, id_col, vec_col, dim)
+            unit_mat = _collect_matrix(emb, id_col, vec_col, dim)
 
     if unit_mat is not None:
-        ids, mat = unit_mat
+        ids, _, mat, live = unit_mat
+        ids, mat = ids[live], mat[live]
         index = {int(i): pos for pos, i in enumerate(ids)}
         bc = spark.sparkContext.broadcast((index, mat))
 
@@ -1470,11 +1308,11 @@ def lsh_topk(
     quadratic (fixed planes degenerate at scale).
 
     THREE regimes, all row-identical (regime tests pin it): the
-    candidate JOIN below the candidate-volume crossover, the broadcast
-    scan kernel above it while the raw matrix fits
-    ``BROADCAST_SCORE_MAX_BYTES``, and PAST that byte cap the
-    cell-sharded grid kernel (``_sharded_lsh_topk`` — VERDICT r10 #1:
-    the join regime past the cap was measured spilling >60 GB to disk
+    candidate JOIN below the candidate-volume crossover, the bucket
+    index through ``_broadcast_scan`` above it while the raw matrix
+    fits ``BROADCAST_SCORE_MAX_BYTES``, and PAST that byte cap the
+    same block scorer through ``_grid_scan`` (VERDICT r10 #1: the join
+    regime past the cap was measured spilling >60 GB to disk
     exhaustion at 2M vectors, so it is no longer reachable there).
 
     ``multiprobe`` enables QUERY-DIRECTED multiprobe (Lv et al.): the
@@ -1517,9 +1355,9 @@ def lsh_topk(
             queries=proj_q,
         )
         return _exact_rerank_pairs(emb, id_col, vec_col, cand, k)
-    # ONE sizing job on the happy path: try to collect the normalized
-    # matrix under the byte cap (needed for broadcast scoring anyway);
-    # its length is the vector count that drives auto-sizing. Only an
+    # ONE sizing job on the happy path: try to collect the matrix
+    # under the byte cap (needed for broadcast scoring anyway); its
+    # length is the vector count that drives auto-sizing. Only an
     # over-cap corpus pays a separate count.
     #
     # ``queries``: optional serving WORKLOAD (same id/vec columns, ids
@@ -1528,8 +1366,8 @@ def lsh_topk(
     # auto-sizing stays a function of CORPUS size (recall depends on
     # the index, not on how many queries hit it). This is the stage-1
     # hook ``rerank_two_stage`` uses.
-    unit_mat = _collect_unit_matrix(emb, id_col, vec_col, dim)
-    n = len(unit_mat[0]) if unit_mat is not None else emb.count()
+    unit_mat = _collect_matrix(emb, id_col, vec_col, dim)
+    n = int(unit_mat[3].sum()) if unit_mat is not None else emb.count()
     if tables is None:
         # Table count must GROW with the corpus, because recall decays
         # with n at fixed tables (measured recall@5 at 12 tables:
@@ -1576,85 +1414,109 @@ def lsh_topk(
         # 0.985 @ 2k/5 planes, 0.96 @ 20k/7 planes (sf1 probe).
         multiprobe = max(2, planes - 2) if planes <= 6 else planes - 1
     n_q = n if queries is None else queries.count()
-    if unit_mat is None:
-        # PAST the broadcast byte cap (VERDICT r10 #1): the bucket-JOIN
-        # regime's pair-scoring join was MEASURED spilling >60 GB to
-        # disk exhaustion at 2M vectors × 2k queries (SCALING.md r10
-        # third-decade probe) — route to the cell-sharded grid kernel
-        # instead, which never carries vectors through a join.
-        return _sharded_lsh_topk(
-            emb, id_col, vec_col, dim, k, planes, tables, multiprobe,
-            queries, n=n, n_q=n_q, cap=BROADCAST_SCORE_MAX_BYTES,
-        )
     # Regime choice (r5): above the candidate-volume crossover, gather
-    # and score candidates INSIDE the worker from a broadcast bucket
-    # index instead of materializing the tables·probes·bucket²
-    # multiset through the join + distinct (measured 352 s at 20k
-    # vectors on the join path). Mean per-table bucket size is
-    # n / 2^planes; both regimes return identical rows
-    # (test_lsh_regimes_identical).
+    # and score candidates INSIDE the worker from a bucket index
+    # instead of materializing the tables·probes·bucket² multiset
+    # through the join + distinct (measured 352 s at 20k vectors on the
+    # join path). Mean per-table bucket size is n / 2^planes; all
+    # regimes return identical rows (test_lsh_regimes_identical).
     est_candidates = n_q * tables * (multiprobe + 1) * (n / (2 ** planes))
-    if est_candidates > LSH_JOIN_MAX_CANDIDATES:
-        rawm = _collect_raw_matrix(emb, id_col, vec_col, dim)
-    else:
-        rawm = None
-    if rawm is not None:
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        ids_s, raw_m, unit_m = rawm
+    if unit_mat is None or est_candidates > LSH_JOIN_MAX_CANDIDATES:
         corpus_keyfn, _ = _lsh_key_fn(dim, planes, tables, 0)
-        probe_keyfn, npb = _lsh_key_fn(dim, planes, tables, multiprobe)
-        cand_udf = _lsh_scan_candidates_udf(
-            emb.sparkSession,
-            corpus_keyfn,
-            probe_keyfn,
-            npb,
-            ids_s,
-            raw_m,
-            unit_m,
-            take=k + 8,
+        probe_keyfn, n_probes = _lsh_key_fn(dim, planes, tables, multiprobe)
+        take = k + 8
+        src = (emb if queries is None else queries).select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).cast("array<double>").alias("qv"),
         )
-        # FINER-than-cores query partitions (VERDICT r8 #6): per-query
-        # scan cost varies with local cluster density (a query in the
-        # densest gaussian gathers the biggest buckets), so cores-wide
-        # partitions leave one task grinding ~2x the mean — the
-        # measured +0.18 exponent (~20 straggler minutes on one core)
-        # of the sf10 lsh_self cell. 4x-cores tasks cut the tail to
-        # ~1/4 of a partition's work and let the scheduler smooth the
-        # density variance. ADAPTIVE, not unconditional: each task
-        # pays fixed scheduler/Arrow overhead (~0.3 s here), so 4x
-        # tasks on a minute-scale cell is pure loss (measured +26 s on
-        # the 60 s sf1 cell) — widen only when estimated candidate
-        # volume says the scan stage is tens of core-minutes, where a
-        # straggler tail dominates fixed overhead by orders.
-        sc = emb.sparkSession.sparkContext
-        fan = 4 if est_candidates > 16 * LSH_JOIN_MAX_CANDIDATES else 1
-        qsrc = fan_out_small_scan(
-            emb if queries is None else queries,
-            min_partitions=fan * sc.defaultParallelism,
-        )
-        cand = (
-            qsrc.select(
-                F.col(id_col).alias("query_id"),
-                cand_udf(F.col(vec_col).cast("array<double>")).alias("cs"),
-            )
-            .select("query_id", F.explode("cs").alias("neighbor_id"))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-        scored = _score_pairs(
-            emb, id_col, vec_col, cand, n=n, unit_mat=unit_mat
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rnk")
-        )
+        if unit_mat is not None:
+            ids_s, raw_m, unit_m, _ = unit_mat
 
+            def kernel_block(payload, x):
+                index, b_ids, b_unit, b_zero = payload
+                pk = probe_keyfn(x).reshape(len(x), tables, n_probes + 1)
+                _, _, tops = _lsh_top_positions(
+                    index, b_unit, b_zero, x, pk, take
+                )
+                return [b_ids[t] for t in tops]
+
+            # FINER-than-cores query partitions (VERDICT r8 #6): per-query
+            # scan cost varies with local cluster density, so cores-wide
+            # partitions leave one task grinding ~2x the mean (the
+            # measured sf10 lsh_self straggler tail). ADAPTIVE, not
+            # unconditional: each task pays fixed scheduler/Arrow
+            # overhead (~0.3 s here), so 4x tasks on a minute-scale cell
+            # is pure loss (measured +26 s on the 60 s sf1 cell) — widen
+            # only when estimated candidate volume says the scan stage is
+            # tens of core-minutes.
+            fan = 4 if est_candidates > 16 * LSH_JOIN_MAX_CANDIDATES else 1
+            cand = _broadcast_scan(
+                src,
+                (
+                    _bucket_index(corpus_keyfn(raw_m)),
+                    ids_s,
+                    unit_m,
+                    (unit_m == 0).all(axis=1),
+                ),
+                kernel_block,
+                min_partitions=fan
+                * emb.sparkSession.sparkContext.defaultParallelism,
+            )
+            return _rank_topk(
+                _score_pairs(emb, id_col, vec_col, cand, n=n, unit_mat=unit_mat),
+                k,
+            )
+        # PAST the broadcast byte cap (VERDICT r10 #1): the bucket-JOIN
+        # regime's pair-scoring join was MEASURED spilling >60 GB to disk
+        # exhaustion at 2M vectors × 2k queries (SCALING.md r10
+        # third-decade probe) — each grid cell builds its shard's bucket
+        # index and runs the same block scorer instead, so no vector
+        # ever rides a join. Cosines are the row-wise einsum over unit
+        # rows, as ``_score_pairs`` computes them.
+        import numpy as np
+        import pandas as pd
+
+        def grid_block(lpdf, rpdf):
+            rpdf = rpdf.sort_values("id")
+            raw = np.vstack(rpdf["v"].to_numpy()).astype(np.float64)
+            unit, norms = _unit_rows(raw)
+            zero_mask = norms == 0
+            x = np.vstack(lpdf["qv"].to_numpy()).astype(np.float64)
+            xq, qzero, tops = _lsh_top_positions(
+                _bucket_index(corpus_keyfn(raw)),
+                unit,
+                zero_mask,
+                x,
+                probe_keyfn(x).reshape(len(x), tables, n_probes + 1),
+                take,
+            )
+            sel = np.concatenate(tops)
+            qrow = np.repeat(np.arange(len(x)), [len(t) for t in tops])
+            cos = pd.array(
+                np.einsum("ij,ij->i", unit[sel], xq[qrow]), dtype="Float64"
+            )
+            cos[zero_mask[sel] | qzero[qrow]] = pd.NA
+            qids = lpdf["query_id"].to_numpy(dtype=np.int64)
+            return qids[qrow], rpdf["id"].to_numpy(dtype=np.int64)[sel], cos
+
+        cand = _grid_scan(
+            src.filter(F.col("qv").isNotNull()),
+            emb.select(
+                F.col(id_col).alias("id"),
+                F.col(vec_col).cast("array<double>").alias("v"),
+            ).filter(F.col("v").isNotNull()),
+            grid_block,
+            take,
+            n_q,
+            n * dim * 8,
+            BROADCAST_SCORE_MAX_BYTES,
+        )
+        return _rank_topk(
+            cand.select(
+                "query_id", "neighbor_id", F.round("score", 6).alias("cosine")
+            ),
+            k,
+        )
     if queries is None:
         # Persisted: the self-join reads the bucketed keys from BOTH
         # sides, and without the persist each side re-runs the scan +
@@ -1714,14 +1576,6 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    scored = _score_pairs(
-        emb, id_col, vec_col, cand, n=n, unit_mat=unit_mat
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
+    return _rank_topk(
+        _score_pairs(emb, id_col, vec_col, cand, n=n, unit_mat=unit_mat), k
     )
