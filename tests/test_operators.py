@@ -79,13 +79,29 @@ def test_dedup_by_key_deterministic(spark):
     assert {(r.k, r.v) for r in last.collect()} == {(1, "b"), (2, "c")}
 
 
-def test_fk_orphans_and_qc(facts, modes):
-    orphans = fk_orphans(facts, "mode", modes, "i94mode")
-    assert [r.fk for r in orphans.collect()] == [7]  # null keys excluded
-    res = qc.fk_check(facts, "mode", modes, "i94mode")
-    assert not res.passed
-    ok = qc.fk_check(facts.filter("mode != 7"), "mode", modes, "i94mode")
-    assert ok.passed
+# (fact keys, dim keys): the fixtures' keys, then hostile inputs.
+_FK_CASES = {
+    "fixture": ([1, 1, 2, 7, None], [1, 2, 3, 9]),
+    "fixture_clean": ([1, 1, 2, None], [1, 2, 3, 9]),
+    "null_fact_keys": ([None, 4, None, 1, None], [1]),
+    "duplicate_dim_keys": ([1, 2, 5], [1, 1, 2, 2, 2]),
+    "repeated_orphans": ([7, 7, 8, 1, 7, 8], [1, 2]),
+    "empty_dim": ([3, 1, 3, None], []),
+    "empty_fact": ([], [1, 2]),
+}
+
+
+@pytest.mark.parametrize("broadcast_dim", [True, False], ids=["broadcast", "shuffle"])
+@pytest.mark.parametrize("case", list(_FK_CASES))
+def test_fk_orphans_and_qc(spark, case, broadcast_dim):
+    fact_keys, dim_keys = _FK_CASES[case]
+    facts = spark.createDataFrame([(k,) for k in fact_keys], "mode int")
+    modes = spark.createDataFrame([(k,) for k in dim_keys], "i94mode int")
+    orphans = fk_orphans(facts, "mode", modes, "i94mode", broadcast_dim=broadcast_dim)
+    got = [r.fk for r in orphans.collect()]
+    want = {k for k in fact_keys if k is not None} - set(dim_keys)
+    assert sorted(got) == sorted(want)  # each orphan once, null keys excluded
+    assert qc.fk_check(facts, "mode", modes, "i94mode").passed == (not want)
 
 
 def test_semi_anti_partition(facts, modes):

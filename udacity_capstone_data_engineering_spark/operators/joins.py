@@ -50,11 +50,18 @@ def fk_orphans(
     """Referential-integrity violations: fact rows whose key has no match
     in the dimension (corrected semantics of reference ``qhi.py:39-91``).
 
-    Returns the violating distinct keys with a count; empty ⇒ FK holds.
-    Distinct-before-join keeps the anti-join input small at scale.
+    Returns one row per distinct non-null orphan key (column ``fk``);
+    empty ⇒ FK holds.
+
+    Broadcast path: anti-join every non-null fact key against the dim
+    key column as-is (duplicate build keys cannot change a left-anti
+    result), then dedupe only the orphans — the one shuffle carries
+    orphans, not the whole distinct key set, and the dim is never
+    deduped by a job of its own. Sort-merge path: both sides shuffle
+    for the join anyway, so deduping each first shrinks that shuffle.
     """
-    keys = fact.select(F.col(fact_key).alias("fk")).where(F.col(fact_key).isNotNull()).distinct()
-    d = dim.select(F.col(dim_key).alias("fk")).distinct()
+    keys = fact.select(F.col(fact_key).alias("fk")).where(F.col("fk").isNotNull())
+    d = dim.select(F.col(dim_key).alias("fk"))
     if broadcast_dim:
-        d = F.broadcast(d)
-    return keys.join(d, on="fk", how="left_anti")
+        return keys.join(F.broadcast(d), on="fk", how="left_anti").distinct()
+    return keys.distinct().join(d.distinct(), on="fk", how="left_anti")

@@ -384,9 +384,11 @@ def distinct_segments(spark, sf_dir):
     """,
 )
 def fk_orphan_lineitems(spark, sf_dir):
-    """Q2 corrected referential-integrity check: LEFT ANTI join of
-    distinct fact keys vs the dim (reference ``qhi.py:39-91`` passed on
-    *any* overlap and returned an inverted flag). Empty ⇒ FK holds."""
+    """Q2 corrected referential-integrity check: the distinct non-null
+    lineitem order keys with no order, via a LEFT ANTI join against the
+    broadcast order keys, deduped after the join (reference
+    ``qhi.py:39-91`` passed on *any* overlap and returned an inverted
+    flag). Empty ⇒ FK holds."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     return fk_orphans(li, "l_orderkey", orders, "o_orderkey")

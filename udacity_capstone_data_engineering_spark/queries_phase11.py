@@ -567,12 +567,9 @@ def quality_pipeline_manifest(spark, sf_dir):
     @pipe.stage("kept", inputs=["gate"])
     def kept(gate_df):
         # Reads the materialized shards; keep=true prunes at the
-        # partition level (asserted in tests/test_round6.py). Partition
-        # values come back as strings (Spark's partition-column
-        # inference has no boolean tier), hence the cast.
-        return gate_df.filter(F.col("keep").cast("boolean")).select(
-            "doc_id", "text"
-        )
+        # partition level (asserted in tests/test_round6.py). keep comes
+        # back boolean: the Pipeline re-reads with the schema it wrote.
+        return gate_df.filter(F.col("keep")).select("doc_id", "text")
 
     @pipe.stage("dedup", inputs=["kept"])
     def dedup(kept_df):
